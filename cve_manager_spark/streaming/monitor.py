@@ -18,6 +18,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from cve_manager_spark.streaming.sinks import read_state, snapshot_sink
+
 
 def reference_stats(events: DataFrame) -> DataFrame:
     """Per-type exact integer moments over a reference (batch) window."""
@@ -120,7 +122,6 @@ def foreach_batch_drift_histogram(
     n_buckets: int = 16,
     vec_col: str = "embedding",
     id_col: str = "vec_id",
-    trigger_available_now: bool = True,
 ):
     """Accumulate the CURRENT-window drift histogram from an embedding
     stream: each micro-batch projects map-side against the frozen
@@ -128,40 +129,23 @@ def foreach_batch_drift_histogram(
     previous snapshot (sum-of-counts is associative, so batch chopping
     cannot change the histogram). Snapshots are keyed by batch id, each
     derived from the newest PREDECESSOR — replayed batches rebuild the
-    same snapshot (the foreach_batch_rollup idempotency discipline)."""
-    from cve_manager_spark.streaming.sinks import (
-        _STATE_PREFIX,
-        _list_state_versions,
-    )
+    same snapshot (the foreach_batch_rollup idempotency discipline).
+    State: (bucket, n)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = drift_bucket_counts(
             batch_df, mu, v, pmin, pmax, n_buckets,
             vec_col=vec_col, id_col=id_col,
         )
-        versions = [
-            b for b in _list_state_versions(spark, out_dir) if b < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
-            part = (
-                prev.unionByName(part)
-                .groupBy("bucket")
-                .agg(F.sum("n").alias("n"))
-            )
-        part.write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("bucket")
+            .agg(F.sum("n").alias("n"))
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
 def read_drift_report(
@@ -171,15 +155,9 @@ def read_drift_report(
     reference one into the batch spec's report shape: (bucket, n_ref,
     n_cur, ppm_ref, ppm_cur, delta_ppm) — exact integer ppm, the PSI /
     total-variation inputs. 2·n_buckets rows in, n_buckets out."""
-    from cve_manager_spark.streaming.sinks import (
-        _STATE_PREFIX,
-        _list_state_versions,
-    )
-
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
+    cur = read_state(spark, out_dir)
+    if cur is None:
         return None
-    cur = spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
     both = ref_hist.select(
         "bucket", F.col("n").alias("n_ref"), F.lit(0).cast("long").alias("n_cur")
     ).unionByName(

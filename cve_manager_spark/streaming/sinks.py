@@ -6,6 +6,11 @@ batch (failure/restart re-delivery) rewrites the same partition instead
 of duplicating rows — exactly-once *effect* on top of at-least-once
 delivery. The same shape carries any transactional target (JDBC upsert
 by batch id, Delta MERGE) by swapping the writer body.
+
+The mergeable states (upsert, rollup and the sketch family) share one
+:func:`snapshot_sink`: each supplies only its state transition
+``update(batch_df, prev)``. Every sink but :func:`stream_cdf_tail`
+starts through :func:`_start`.
 """
 
 from __future__ import annotations
@@ -37,7 +42,20 @@ def _sized(df: DataFrame, pcol: str | None = None) -> DataFrame:
     return df.hint("rebalance", pcol) if pcol else df.hint("rebalance")
 
 
-def foreach_batch_parquet(stream_df: DataFrame, out_dir: str, trigger_available_now: bool = True):
+def _start(stream_df: DataFrame, write_batch, checkpoint_dir: str):
+    """Start ``write_batch`` as the foreachBatch body of ``stream_df``
+    with its offsets checkpointed at ``checkpoint_dir``, under the
+    availableNow trigger (drain everything present, then stop) that
+    every sink here runs with. Returns the started StreamingQuery."""
+    return (
+        stream_df.writeStream.foreachBatch(write_batch)
+        .option("checkpointLocation", checkpoint_dir)
+        .trigger(availableNow=True)
+        .start()
+    )
+
+
+def foreach_batch_parquet(stream_df: DataFrame, out_dir: str):
     """Write a stream to parquet partitioned by micro-batch id,
     idempotently. Returns the started StreamingQuery."""
 
@@ -47,12 +65,7 @@ def foreach_batch_parquet(stream_df: DataFrame, out_dir: str, trigger_available_
             .parquet(f"{out_dir}/_batch_id={batch_id}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
 
 
 def _list_state_versions(spark, out_dir: str) -> list[int]:
@@ -71,13 +84,56 @@ def _list_state_versions(spark, out_dir: str) -> list[int]:
     return sorted(out)
 
 
-def read_upsert_state(spark, out_dir: str) -> DataFrame | None:
-    """Current table maintained by ``foreach_batch_upsert`` (newest
-    snapshot), or None before the first batch commits."""
+def _next_version(spark, out_dir: str) -> int:
+    """Version number the next log-structured write under out_dir takes:
+    one past the newest, 0 for an empty state."""
+    versions = _list_state_versions(spark, out_dir)
+    return versions[-1] + 1 if versions else 0
+
+
+def read_state(spark, out_dir: str) -> DataFrame | None:
+    """Current state written by :func:`snapshot_sink` (the newest
+    ``_state_v{b}`` snapshot), or None before the first batch commits.
+    Each sink's docstring names the columns its state carries."""
     versions = _list_state_versions(spark, out_dir)
     if not versions:
         return None
     return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+
+
+def snapshot_sink(stream_df: DataFrame, out_dir: str, update):
+    """The snapshot discipline every mergeable state here shares (the
+    merge framing of Agarwal et al., "Mergeable summaries", PODS 2012):
+    each micro-batch writes a FULL, self-contained state snapshot to
+    ``{out_dir}/_state_v{batch_id}``, computed as ``update(batch_df,
+    prev)`` where ``prev`` is the newest snapshot with a smaller id
+    (None before the first batch). A sink is its state transition
+    ``update`` only; whatever trim or rank the state needs runs inside
+    it, because it applies to the first batch too.
+
+    Replayed batches (at-least-once delivery after a restart) rebuild
+    the same snapshot from the same predecessor, so every snapshot sink
+    is idempotent — exactly-once effect. The snapshot is REBALANCEd
+    (:func:`_sized`) and written in overwrite mode; read it back with
+    :func:`read_state`, retire old versions with
+    :func:`vacuum_snapshot_state`."""
+
+    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
+        spark = batch_df.sparkSession
+        versions = [v for v in _list_state_versions(spark, out_dir) if v < batch_id]
+        prev = (
+            spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+            if versions
+            else None
+        )
+        _sized(update(batch_df, prev)).write.mode("overwrite").parquet(
+            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
+        )
+
+    return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
+
+
+read_upsert_state = read_state
 
 
 def foreach_batch_upsert(
@@ -85,7 +141,6 @@ def foreach_batch_upsert(
     out_dir: str,
     key_cols: list[str],
     order_cols: list[str],
-    trigger_available_now: bool = True,
 ):
     """Streaming MERGE INTO emulation without a table format: maintain the
     newest row per key across micro-batches (the streaming twin of the
@@ -99,54 +154,39 @@ def foreach_batch_upsert(
     Ties on ``order_cols`` resolve to the incoming batch (MERGE "when
     matched then update" semantics). Snapshot retention/compaction is the
     operator's concern; with Delta/Iceberg this whole function collapses
-    to a real MERGE with file skipping.
+    to a real MERGE with file skipping. State (``read_upsert_state``):
+    the input's columns, one row per key.
     """
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        versions = [v for v in _list_state_versions(spark, out_dir) if v < batch_id]
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         cur = batch_df.withColumn("__src", F.lit(1))
-        if versions:
-            prev = spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+        if prev is not None:
             cur = prev.withColumn("__src", F.lit(0)).unionByName(cur)
         w = Window.partitionBy(*key_cols).orderBy(
             *[F.col(c).desc() for c in order_cols], F.col("__src").desc()
         )
-        snap = (
+        return (
             cur.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") == 1)
             .drop("__rn", "__src")
         )
-        _sized(snap).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
 def read_rollup_state(spark, out_dir: str) -> DataFrame | None:
     """Current day-grain rollup maintained by ``foreach_batch_rollup``
     (newest snapshot), emitted with the same schema as the batch
     ``rollup_cascade`` query: (day, n_events, sum_value double)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
+    snap = read_state(spark, out_dir)
+    if snap is None:
         return None
-    snap = spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
     return snap.select(
         "day", "n_events", F.col("sv").cast("double").alias("sum_value")
     )
 
 
-def foreach_batch_rollup(
-    stream_df: DataFrame,
-    out_dir: str,
-    trigger_available_now: bool = True,
-):
+def foreach_batch_rollup(stream_df: DataFrame, out_dir: str):
     """Incrementally maintained materialized rollup: the streaming twin
     of the batch ``rollup_cascade`` query. Each micro-batch aggregates
     its OWN rows to day grain and re-aggregates against the previous
@@ -161,37 +201,27 @@ def foreach_batch_rollup(
     asserted stream==batch in tests), and snapshots are keyed by batch
     id with each one derived from the newest PREDECESSOR, so replayed
     batches rebuild the same snapshot (idempotent, same discipline as
-    ``foreach_batch_upsert``).
+    ``foreach_batch_upsert``). State: (day, n_events, sv decimal(38,4)).
     """
     from cve_manager_spark.functions.helpers import dec
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch_df.groupBy(F.to_date("ts").alias("day")).agg(
             F.count(F.lit(1)).alias("n_events"),
             F.sum(dec(F.col("value"))).cast("decimal(38,4)").alias("sv"),
         )
-        versions = [v for v in _list_state_versions(spark, out_dir) if v < batch_id]
-        if versions:
-            prev = spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
-            part = (
-                prev.unionByName(part)
-                .groupBy("day")
-                .agg(
-                    F.sum("n_events").alias("n_events"),
-                    F.sum("sv").cast("decimal(38,4)").alias("sv"),
-                )
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("day")
+            .agg(
+                F.sum("n_events").alias("n_events"),
+                F.sum("sv").cast("decimal(38,4)").alias("sv"),
             )
-        _sized(part).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
 def _list_day_dirs(spark, ver_dir: str, col: str = "day") -> list[str]:
@@ -282,11 +312,7 @@ def _keyset_compose(
     return _overlay_compose(spark, out_dir, "day", upto, days)
 
 
-def foreach_batch_distinct_rollup(
-    stream_df: DataFrame,
-    out_dir: str,
-    trigger_available_now: bool = True,
-):
+def foreach_batch_distinct_rollup(stream_df: DataFrame, out_dir: str):
     """Incrementally maintained DAILY ACTIVE USERS: the streaming face
     of a metric plain aggregate merging cannot give — COUNT(DISTINCT
     user) per day is not a sum of per-batch counts, so the state is the
@@ -333,12 +359,7 @@ def foreach_batch_distinct_rollup(
             .parquet(f"{out_dir}/{_STATE_PREFIX}{batch_id}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
 
 
 def compact_keyset_state(spark, out_dir: str) -> dict[str, int]:
@@ -509,7 +530,7 @@ def read_stickiness_state(spark, out_dir: str) -> DataFrame | None:
     )
 
 
-def _marker_sink(stream_df, table_dir, apply_batch, trigger_available_now):
+def _marker_sink(stream_df, table_dir, apply_batch):
     """Shared foreachBatch scaffolding for the stateful-table sinks:
     the ``_last_batch`` replay marker (a replayed batch with id ≤ the
     marker is skipped — exactly-once effect over at-least-once
@@ -528,12 +549,7 @@ def _marker_sink(stream_df, table_dir, apply_batch, trigger_available_now):
         apply_batch(batch_df, batch_id)
         marker.write_text(str(batch_id))
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{table_dir}_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, write_batch, f"{table_dir}_checkpoint")
 
 
 def _gated_dedup_sink(
@@ -545,7 +561,6 @@ def _gated_dedup_sink(
     candidates,
     outputs,
     committed: bool = False,
-    trigger_available_now: bool = True,
     read_override: "dict | None" = None,
     write_override: "dict | None" = None,
 ):
@@ -655,7 +670,7 @@ def _gated_dedup_sink(
                 if isinstance(v, DataFrame):
                     v.unpersist()
 
-    return _marker_sink(stream_df, table_dir, apply_batch, trigger_available_now)
+    return _marker_sink(stream_df, table_dir, apply_batch)
 
 
 def foreach_batch_merge_lake(
@@ -663,7 +678,6 @@ def foreach_batch_merge_lake(
     table_dir: str,
     key_cols: list[str],
     order_cols: list[str],
-    trigger_available_now: bool = True,
     committed: bool = False,
 ):
     """Streaming CDC MERGE into a plain parquet lake table: each
@@ -774,7 +788,7 @@ def foreach_batch_merge_lake(
             winner = winners_vs(spark.read.parquet(table_dir))
             maintenance.merge_upsert(spark, table_dir, winner, key_cols=key_cols)
 
-    return _marker_sink(stream_df, table_dir, apply_batch, trigger_available_now)
+    return _marker_sink(stream_df, table_dir, apply_batch)
 
 
 def read_vectors_stream(
@@ -804,7 +818,6 @@ def foreach_batch_semantic_dedup(
     stream_df: DataFrame,
     table_dir: str,
     centroids: list[list[int]],
-    trigger_available_now: bool = True,
     committed: bool = False,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
@@ -902,14 +915,12 @@ def foreach_batch_semantic_dedup(
         candidates=candidates,
         outputs=outputs,
         committed=committed,
-        trigger_available_now=trigger_available_now,
     )
 
 
 def foreach_batch_digest_dedup(
     stream_df: DataFrame,
     table_dir: str,
-    trigger_available_now: bool = True,
     committed: bool = False,
     id_col: str = "doc_id",
     text_col: str = "text",
@@ -982,7 +993,6 @@ def foreach_batch_digest_dedup(
         candidates=candidates,
         outputs=outputs,
         committed=committed,
-        trigger_available_now=trigger_available_now,
     )
 
 
@@ -1012,7 +1022,6 @@ def foreach_batch_minhash_dedup(
     n: int = 2,
     num_hashes: int = 32,
     bands: int = 16,
-    trigger_available_now: bool = True,
     id_col: str = "doc_id",
     text_col: str = "text",
     docs_bucket_table: str | None = None,
@@ -1134,7 +1143,6 @@ def foreach_batch_minhash_dedup(
         candidates=candidates,
         outputs=outputs,
         committed=committed,
-        trigger_available_now=trigger_available_now,
         read_override=read_override,
         write_override=write_override,
     )
@@ -1144,7 +1152,6 @@ def foreach_batch_phash_dedup(
     stream_df: DataFrame,
     table_dir: str,
     threshold: int = 6,
-    trigger_available_now: bool = True,
     committed: bool = False,
 ):
     """Streaming perceptual-hash dedup gate — the FOURTH continuous
@@ -1260,7 +1267,6 @@ def foreach_batch_phash_dedup(
         candidates=candidates,
         outputs=outputs,
         committed=committed,
-        trigger_available_now=trigger_available_now,
     )
 
 
@@ -1275,7 +1281,6 @@ def foreach_batch_cms(
     out_dir: str,
     key_expr: str = "cast(user_id as string)",
     rows: int = 4,
-    trigger_available_now: bool = True,
 ):
     """Streaming CountMin sketch — the capacity-bounded frequency state
     the batch ``countmin_estimate_error`` audit prices (same md5 bucket
@@ -1286,10 +1291,10 @@ def foreach_batch_cms(
     proven stream == batch instead of assumed. State is d·w integers
     regardless of stream volume; snapshots are keyed by batch id with
     each derived from the newest predecessor (the foreach_batch_rollup
-    idempotency discipline), so replays rebuild identical state."""
+    idempotency discipline), so replays rebuild identical state.
+    State (``read_cms_state``): (r, b, c)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch_df.select(
                 F.explode(
@@ -1315,36 +1320,18 @@ def foreach_batch_cms(
             .groupBy("r", "b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
-            part = (
-                prev.unionByName(part)
-                .groupBy("r", "b")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-        _sized(part).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("r", "b")
+            .agg(F.sum("c").cast("bigint").alias("c"))
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_cms_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest CMS snapshot: (r, b, c)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_cms_state = read_state
 
 
 def cms_estimate(
@@ -1385,7 +1372,6 @@ def foreach_batch_bloom(
     out_dir: str,
     key_expr: str = "cast(user_id as string)",
     k: int = 3,
-    trigger_available_now: bool = True,
 ):
     """Streaming Bloom filter — the membership state the batch
     ``bloom_fp_audit`` prices (256 bits, k=3 md5 hash functions): each
@@ -1394,42 +1380,26 @@ def foreach_batch_bloom(
     associative, commutative AND idempotent, so neither batch chopping
     nor replay can change the filter; snapshots still key by batch id
     for the uniform restart discipline. State is ≤ 256 ints forever —
-    the whole point of the sketch."""
+    the whole point of the sketch.
+    State (``read_bloom_state``): (b) — the set bit positions."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
-        ks = spark.range(0, k).select(F.col("id").cast("int").alias("k"))
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
+        ks = batch_df.sparkSession.range(0, k).select(
+            F.col("id").cast("int").alias("k")
+        )
         part = (
             batch_df.crossJoin(F.broadcast(ks))
             .select(_bloom_bit("k", key_expr).alias("b"))
             .distinct()
         )
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
-            part = prev.unionByName(part).distinct()
-        _sized(part).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
+        if prev is None:
+            return part
+        return prev.unionByName(part).distinct()
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_bloom_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest Bloom snapshot: (b) — the set bit positions."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_bloom_state = read_state
 
 
 def bloom_might_contain(
@@ -1458,7 +1428,6 @@ def foreach_batch_occupancy(
     out_dir: str,
     group_col: str = "event_type",
     key_expr: str = "cast(user_id as string)",
-    trigger_available_now: bool = True,
 ):
     """Streaming linear-counting state — the occupancy sketch the batch
     ``distinct_bucket_occupancy`` audit prices (256 md5 buckets per
@@ -1468,10 +1437,10 @@ def foreach_batch_occupancy(
     ≤ #groups × 256 rows regardless of stream volume; the distinct
     estimate itself (−w·ln(1 − occupied/w)) is driver-side over the
     per-group report (:func:`linear_count_estimate`) — the ln never
-    enters the engine, same rule as the drift PSI."""
+    enters the engine, same rule as the drift PSI.
+    State (``read_occupancy_state``): (g, b)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         b = (
             F.expr(_hex_bucket(key_expr)) * 16
             + F.expr(
@@ -1482,32 +1451,14 @@ def foreach_batch_occupancy(
         part = batch_df.select(
             F.col(group_col).alias("g"), b.alias("b")
         ).distinct()
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
-            part = prev.unionByName(part).distinct()
-        _sized(part).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
+        if prev is None:
+            return part
+        return prev.unionByName(part).distinct()
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_occupancy_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest occupancy snapshot: (g, b)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_occupancy_state = read_state
 
 
 def linear_count_estimate(report_rows, w: int = 256) -> dict:
@@ -1533,7 +1484,6 @@ def foreach_batch_quantile_hist(
     out_dir: str,
     group_col: str = "event_type",
     value_expr: str = "CAST(FLOOR(value * 1000) AS BIGINT)",
-    trigger_available_now: bool = True,
 ):
     """Streaming log2-bucket quantile histogram — the quantile member
     of the sketch-state family (CMS frequency, Bloom membership,
@@ -1552,10 +1502,10 @@ def foreach_batch_quantile_hist(
     Domain: value_expr must be non-negative (bin() of a negative long
     is its 64-char two's complement in Spark, which would rank above
     every positive bucket) — shift or clamp signed measures before
-    sketching, the same precondition the batch audit carries."""
+    sketching, the same precondition the batch audit carries.
+    State (``read_quantile_hist_state``): (g, b, c)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch_df.select(
                 F.col(group_col).alias("g"),
@@ -1564,36 +1514,18 @@ def foreach_batch_quantile_hist(
             .groupBy("g", "b")
             .agg(F.count(F.lit(1)).cast("bigint").alias("c"))
         )
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
-            part = (
-                prev.unionByName(part)
-                .groupBy("g", "b")
-                .agg(F.sum("c").cast("bigint").alias("c"))
-            )
-        _sized(part).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
+        if prev is None:
+            return part
+        return (
+            prev.unionByName(part)
+            .groupBy("g", "b")
+            .agg(F.sum("c").cast("bigint").alias("c"))
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_quantile_hist_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest quantile-histogram snapshot: (g, b, c)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_quantile_hist_state = read_state
 
 
 def quantile_hist_estimate(
@@ -1638,11 +1570,11 @@ def quantile_hist_estimate(
 def vacuum_snapshot_state(spark, out_dir: str, keep_last: int = 2) -> dict:
     """Retire superseded snapshot-state versions — the sketch-state
     counterpart of the commit-log's manifest retention (VERDICT r10
-    #6 closed the log; this closes the states): the upsert/rollup/
-    CMS/Bloom/occupancy/quantile-hist sinks write one SELF-CONTAINED
-    ``_state_v{b}`` dir per micro-batch, each derived from its newest
-    predecessor, so a long-running stream's directory grows one
-    snapshot per batch forever while reads only ever touch the newest.
+    #6 closed the log; this closes the states): any state written by
+    :func:`snapshot_sink` holds one SELF-CONTAINED ``_state_v{b}`` dir
+    per micro-batch, each derived from its newest predecessor, so a
+    long-running stream's directory grows one snapshot per batch
+    forever while reads only ever touch the newest.
     Deleting all but the trailing ``keep_last`` changes no read and no
     future merge.
 
@@ -1686,7 +1618,6 @@ def foreach_batch_kmv(
         "cast(cast(ts as date) as string))"
     ),
     k: int = 64,
-    trigger_available_now: bool = True,
 ):
     """Streaming KMV theta-sketch state — the distinct-count member of
     the sketch-state family whose SET OPERATIONS stay exact to merge:
@@ -1697,49 +1628,30 @@ def foreach_batch_kmv(
     replay cannot change the state (the Bloom-bits argument, applied
     to an ordered set). Each micro-batch reduces to <= #groups x k
     rows before touching the previous snapshot; state is #groups x k
-    longs regardless of stream volume."""
+    longs regardless of stream volume.
+    State (``read_kmv_state``): (g, h)."""
 
     from cve_manager_spark.functions.helpers import kmv_hash60
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         h = kmv_hash60(F.expr(element_expr))
         part = (
             batch_df.select(F.col(group_col).alias("g"), h.alias("h"))
             .distinct()
         )
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
+        if prev is not None:
             part = prev.unionByName(part).distinct()
         w = Window.partitionBy("g").orderBy("h")
-        trimmed = (
+        return (
             part.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= k)
             .drop("__rn")
         )
-        _sized(trimmed).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_kmv_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest KMV snapshot: (g, h)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_kmv_state = read_state
 
 
 def kmv_estimate(state_df: DataFrame, k: int = 64) -> DataFrame:
@@ -1767,7 +1679,6 @@ def foreach_batch_join_view(
     dim_key: str,
     order_col: str,
     n_buckets: int = 16,
-    trigger_available_now: bool = True,
 ):
     """Incrementally maintained JOIN view — the IVM face plain
     aggregate merging cannot give (foreach_batch_rollup maintains
@@ -1843,12 +1754,7 @@ def foreach_batch_join_view(
             .parquet(f"{out_dir}/{_STATE_PREFIX}{batch_id}")
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
 
 
 def read_join_view(spark, out_dir: str) -> DataFrame | None:
@@ -1916,8 +1822,7 @@ def _apply_view_delta(
         "int"
     )
     joined = joined.withColumn("kb", kb)
-    versions = _list_state_versions(spark, out_dir)
-    next_v = (versions[-1] + 1) if versions else 0
+    next_v = _next_version(spark, out_dir)
     prev = _overlay_compose(
         spark, out_dir, "kb", upto=next_v, parts_filter=touched
     )
@@ -1937,7 +1842,6 @@ def foreach_batch_heavy_hitters(
     out_dir: str,
     key_expr: str = "cast(user_id as string)",
     k: int = 8,
-    trigger_available_now: bool = True,
 ):
     """Streaming Misra-Gries heavy-hitter summary — the mergeable
     frequency-SUMMARY state next to the CMS frequency SKETCH: at most
@@ -1957,10 +1861,10 @@ def foreach_batch_heavy_hitters(
     GUARANTEES are what survive any chopping, so the tests assert
     containment + undercount bounds against exact counts, the HLL
     rows-only discipline. State carries ``n_total`` (items processed)
-    so the bound is computable from the state alone."""
+    so the bound is computable from the state alone.
+    State (``read_heavy_hitters_state``): (key, c, n_total)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = (
             batch_df.select(F.expr(key_expr).alias("key"))
             .groupBy("key")
@@ -1968,13 +1872,7 @@ def foreach_batch_heavy_hitters(
         )
         n_batch = part.agg(F.sum("c")).head()[0] or 0
         n_prev = 0
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
+        if prev is not None:
             n_prev = prev.agg(F.max("n_total")).head()[0] or 0
             part = (
                 prev.select("key", "c")
@@ -1995,26 +1893,14 @@ def foreach_batch_heavy_hitters(
             part = part.withColumn(
                 "c", (F.col("c") - F.lit(t)).cast("long")
             ).where(F.col("c") > 0)
-        part.withColumn(
+        return part.withColumn(
             "n_total", F.lit(int(n_prev) + int(n_batch)).cast("long")
-).hint("rebalance").write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
         )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_heavy_hitters_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest Misra-Gries snapshot: (key, c, n_total)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_heavy_hitters_state = read_state
 
 
 def heavy_hitters_report(state_df: DataFrame, k: int = 8) -> DataFrame:
@@ -2238,7 +2124,6 @@ def foreach_batch_ss_facts(
     facts_key: str,
     dim_key: str,
     n_buckets: int = 16,
-    trigger_available_now: bool = True,
 ):
     """Fact side of the TWO-STREAM join view (fact stream ⋈ dim stream
     — the variant :func:`foreach_batch_join_view` cannot give, whose
@@ -2306,9 +2191,8 @@ def foreach_batch_ss_facts(
             new_facts = new_facts.localCheckpoint(eager=True)
             _pins |= _checkpoint_rdd_ids(new_facts)
             if not new_facts.isEmpty():
-                fv = _list_state_versions(spark, fdir)
                 _sized(new_facts, "kb").write.partitionBy("kb").parquet(
-                    f"{fdir}/{_STATE_PREFIX}{(fv[-1] + 1) if fv else 0}"
+                    f"{fdir}/{_STATE_PREFIX}{_next_version(spark, fdir)}"
                 )
             dim_cur = _overlay_compose(
                 spark, ddir, "kb", parts_filter=touched
@@ -2335,13 +2219,11 @@ def foreach_batch_ss_facts(
                 if prev_view is not None
                 else add
             )
-            vv = _list_state_versions(spark, vdir)
             _sized(out, "kb").write.partitionBy("kb").parquet(
-                f"{vdir}/{_STATE_PREFIX}{(vv[-1] + 1) if vv else 0}"
+                f"{vdir}/{_STATE_PREFIX}{_next_version(spark, vdir)}"
             )
 
-    return _ss_writer(stream_df, out_dir, "facts", apply,
-                      trigger_available_now)
+    return _start(stream_df, apply, f"{out_dir}/_checkpoint_facts")
 
 
 def foreach_batch_ss_dim(
@@ -2352,7 +2234,6 @@ def foreach_batch_ss_dim(
     order_col: str,
     n_buckets: int = 16,
     watermark_delay: int | None = None,
-    trigger_available_now: bool = True,
 ):
     """Dim side of the two-stream join view: a stream of CDC upserts
     with WATERMARK-BOUNDED REORDERING. Each micro-batch reduces to its
@@ -2438,9 +2319,8 @@ def foreach_batch_ss_dim(
                     new_dim = prev_dim.join(
                         new_keys, on=dim_key, how="left_anti"
                     ).unionByName(delta_new)
-                dv = _list_state_versions(spark, ddir)
                 _sized(new_dim, "kb").write.partitionBy("kb").parquet(
-                    f"{ddir}/{_STATE_PREFIX}{(dv[-1] + 1) if dv else 0}"
+                    f"{ddir}/{_STATE_PREFIX}{_next_version(spark, ddir)}"
                 )
             # current image per batch key = strictly-newer delta over
             # the pre-batch state restricted to the batch's keys
@@ -2502,9 +2382,8 @@ def foreach_batch_ss_dim(
                     else keep.unionByName(rebuilt)
                 )
             if rebuilt is not None:
-                vv = _list_state_versions(spark, vdir)
                 _sized(rebuilt, "kb").write.partitionBy("kb").parquet(
-                    f"{vdir}/{_STATE_PREFIX}{(vv[-1] + 1) if vv else 0}"
+                    f"{vdir}/{_STATE_PREFIX}{_next_version(spark, vdir)}"
                 )
             if applied:
                 # watermark LAST: it must never claim an order the
@@ -2515,17 +2394,7 @@ def foreach_batch_ss_dim(
                     batch_max if hw is None else max(hw, batch_max),
                 )
 
-    return _ss_writer(stream_df, out_dir, "dim", apply,
-                      trigger_available_now)
-
-
-def _ss_writer(stream_df, out_dir, side, apply, trigger_available_now):
-    writer = stream_df.writeStream.foreachBatch(apply).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint_{side}"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return _start(stream_df, apply, f"{out_dir}/_checkpoint_dim")
 
 
 def read_stream_stream_join(spark, out_dir: str) -> DataFrame | None:
@@ -2546,7 +2415,6 @@ def foreach_batch_bottomk_sample(
     id_expr: str = "cast(event_id as string)",
     payload_cols: tuple[str, ...] = ("event_type", "value"),
     k: int = 64,
-    trigger_available_now: bool = True,
 ):
     """Streaming BOTTOM-K SAMPLE state — the distributed reservoir, and
     the seventh member of the sketch-state family (CMS, Bloom,
@@ -2562,42 +2430,23 @@ def foreach_batch_bottomk_sample(
     across executors; the bottom-k-by-hash formulation is the standard
     distributed replacement and costs one TakeOrderedAndProject per
     micro-batch over ≤ |batch| + k rows. State is k rows whatever the
-    stream volume; compatible with :func:`vacuum_snapshot_state`."""
+    stream volume; compatible with :func:`vacuum_snapshot_state`.
+    State (``read_bottomk_sample_state``): (d, id, *payload)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch_df.select(
             F.md5(F.expr(id_expr)).alias("d"),
             F.expr(id_expr).alias("id"),
             *[F.col(c) for c in payload_cols],
         ).dropDuplicates(["d"])
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
+        if prev is not None:
             part = prev.unionByName(part).dropDuplicates(["d"])
-        trimmed = part.orderBy("d").limit(k)
-        _sized(trimmed).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
+        return part.orderBy("d").limit(k)
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_bottomk_sample_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest bottom-k sample snapshot: (d, id, *payload)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_bottomk_sample_state = read_state
 
 
 def foreach_batch_bottomk_stratified(
@@ -2607,7 +2456,6 @@ def foreach_batch_bottomk_stratified(
     id_expr: str = "cast(event_id as string)",
     payload_cols: tuple[str, ...] = ("value",),
     k: int = 16,
-    trigger_available_now: bool = True,
 ):
     """STRATIFIED bottom-k sample state — the eighth sketch state
     (after CMS, Bloom, occupancy, quantile-hist, KMV, Misra-Gries and
@@ -2627,48 +2475,29 @@ def foreach_batch_bottomk_stratified(
     never a global sort — and the state read joins nothing. Snapshot
     discipline (full state per version dir keyed on batch_id,
     replay-idempotent) and :func:`vacuum_snapshot_state` compatibility
-    are shared with every sketch state here."""
+    are shared with every sketch state here.
+    State (``read_bottomk_stratified_state``): (grp, d, id, *payload)."""
 
-    def write_batch(batch_df: DataFrame, batch_id: int) -> None:
-        spark = batch_df.sparkSession
+    def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
         part = batch_df.select(
             F.expr(group_expr).alias("grp"),
             F.md5(F.expr(id_expr)).alias("d"),
             F.expr(id_expr).alias("id"),
             *[F.col(c) for c in payload_cols],
         ).dropDuplicates(["grp", "d"])
-        versions = [
-            v for v in _list_state_versions(spark, out_dir) if v < batch_id
-        ]
-        if versions:
-            prev = spark.read.parquet(
-                f"{out_dir}/{_STATE_PREFIX}{versions[-1]}"
-            )
+        if prev is not None:
             part = prev.unionByName(part).dropDuplicates(["grp", "d"])
         w = Window.partitionBy("grp").orderBy("d")
-        trimmed = (
+        return (
             part.withColumn("__rn", F.row_number().over(w))
             .where(F.col("__rn") <= k)
             .drop("__rn")
         )
-        _sized(trimmed).write.mode("overwrite").parquet(
-            f"{out_dir}/{_STATE_PREFIX}{batch_id}"
-        )
 
-    writer = stream_df.writeStream.foreachBatch(write_batch).option(
-        "checkpointLocation", f"{out_dir}/_checkpoint"
-    )
-    if trigger_available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
+    return snapshot_sink(stream_df, out_dir, update)
 
 
-def read_bottomk_stratified_state(spark, out_dir: str) -> DataFrame | None:
-    """Newest stratified sample snapshot: (grp, d, id, *payload)."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    return spark.read.parquet(f"{out_dir}/{_STATE_PREFIX}{versions[-1]}")
+read_bottomk_stratified_state = read_state
 
 
 # ---------------------------------------------------------------------------
@@ -2714,8 +2543,7 @@ def apply_dim_changes(
     if prev_view is not None:
         keep = prev_view.join(keys, on=dim_key, how="left_anti")
         rebuilt = keep.unionByName(rebuilt)
-    versions = _list_state_versions(spark, vdir)
-    next_v = (versions[-1] + 1) if versions else 0
+    next_v = _next_version(spark, vdir)
     rebuilt.write.mode("overwrite").partitionBy("kb").parquet(
         f"{vdir}/{_STATE_PREFIX}{next_v}"
     )
@@ -2752,8 +2580,7 @@ def bootstrap_join_view(
     view = facts.join(
         dim, facts[facts_key] == dim[dim_key]
     ).withColumn("kb", _ss_kb(facts_key, n_buckets))
-    versions = _list_state_versions(spark, out_dir)
-    if versions:
+    if _next_version(spark, out_dir) > 0:
         raise ValueError(f"join view already exists under {out_dir}")
     _sized(view, "kb").write.partitionBy("kb").parquet(
         f"{out_dir}/{_STATE_PREFIX}0"
