@@ -367,150 +367,6 @@ def main() -> None:
         "steal_core_s_per_pass": steal_per_pass,
         "n_passes": n_passes,
         "sf": sf,
-        "notes": {
-            "r14_run": "65.67s over the same 89 headliners at final "
-            "r14-optimization HEAD (r13 committed: 93.99; mid-build r14 "
-            "reference: 86.77; earlier optimization-window runs at "
-            "~zero steal: 73.29 then 68.16). The final window's host "
-            "was chronically stolen (this run: 272.5/468.1/18.5 core-s "
-            "per pass — min-of-3 rides the one clean pass; six sibling "
-            "runs at 63.5-79.9 track steal, not code), so per-change "
-            "attribution lives in OPTIMIZATION_r14.md's order-balanced "
-            "fresh-process ABBAs: checkpoint-block cleanup 0.82x, "
-            "cache-compression-off 0.75x, ParallelGC 0.81x, triangle "
-            "pair-gen kernel 0.84x — each measured faster under "
-            "equal-or-worse steal. No headline-set change this round; "
-            "the round's new faces (catalog_add_drop_table, "
-            "timetravel_cdf_pruned, catalog_cdf_atomic) build scratch "
-            "commit-log state on first run, so they stay OUT per the "
-            "r8 build-vs-query rule; sf1 pricing in "
-            "SF1_DIFFERENTIAL.json (28/28 hash-match, graph_kcore's "
-            "oracle exception closed via the procedural fixpoint "
-            "peel). agg_groupby (r13 watch) 1.03s min in the 68.16 "
-            "run — the r13 1.28x was noise as suspected.",
-            "r13_run": "93.99s over 89 headliners (r12 committed: 97.76 "
-            "over 88); steal 7.9/2.9/3.1 core-s per pass (final ~0.1%), "
-            "no query regressed >1.5x vs r12. New headliner "
-            "sample_bottomk_stratified 0.37s (one stratum-keyed window "
-            "rank). epoch_shuffle_blocks 1.1->0.68s: the r13 "
-            "digest-prefix-bucket ranking drops the RangePartitioner's "
-            "sampling job along with its cross-action hazard. "
-            "hash_sample_quantile_error 0.81s and dedup_image_phash "
-            "0.56s in-suite (watchlist: healthy). sf1 pricing for the "
-            "dedup/graph/ANN families "
-            "lives in SF1_DIFFERENTIAL.json (21/21 hash-match at 10x "
-            "driver scale).",
-            "r12_weak_flags_cleared": "both r11 weak flags structurally "
-            "resolved: dedup_image_phash 0.61s IN-SUITE (was 7.5-11.5 — "
-            "the pHash fingerprint relation is now a materialized "
-            "artifact, decode runs once per corpus snapshot; solo "
-            "steady-state 0.83s) and hash_sample_quantile_error 0.87s "
-            "in-suite (solo min-of-6 at near-zero steal 1.12s vs r10's "
-            "0.96 = 1.16x, under the 1.5x bar — the r11 2-3x drift was "
-            "suite interference from the phash decode kernels, gone "
-            "with the artifact). New headliner epoch_shuffle_blocks "
-            "~1.1s (two digest range-sorts + broadcast join).",
-            "r11_head_run": "third full r11 run at final HEAD, 99.59s over 87 — under 100s with the full grown set (r10 committed: 118.14s over 82). The two newest audits price sub-second (seasonal_naive_backtest 0.39s, join_cardinality_audit 0.34s); kmv/logbucket/t_closeness hold at ~1s. Passes' steal 8.2/38.5/8.7 core-s (final 0.8% — no heal pass needed). Shared-85 vs the second r11 run: 98.87s vs 102.21s.",
-            "r11_final_run": "second full r11 run, 102.21s over 85 (the "
-            "82-set plus the three new round-11 capability headliners: "
-            "logbucket_quantile_error 1.07s, t_closeness_audit 0.84s, "
-            "kmv_set_ops_error 0.95s — all histogram/top-k-grain, "
-            "priced ~1s each). Amortized artifacts hold: "
-            "embedding_drift_buckets 0.78s, semantic_dedup_frozen_keep "
-            "2.35s. Passes' steal 38.1/9.1/18.1 core-s (final pass "
-            "1.7% < the 2% heal threshold). Shared-82 vs the first r11 "
-            "run: 99.3s vs 104.8s — the engine got FASTER while the "
-            "headline set grew",
-            "r11_shared78_drift_attributed": "VERDICT r10 #4 closed: solo "
-            "min-of-6 at ~zero steal (0.0-0.1 stolen core-s each, "
-            "before-load ~2) for the four biggest r9->r10 relative "
-            "regressions: window_rank 0.503s (r9 0.41 — 1.23x, within "
-            "noise), window_session 0.427s (BEATS r9's 0.58), value_mad "
-            "1.144s (BEATS r9's 1.2), customer_rfm 0.461s (BEATS r9's "
-            "0.57). Three of four beat r9 solo with zero code changes — "
-            "the +6% shared-78 drift was ambient host noise, not plan "
-            "regression",
-            "r11_frozen_artifacts_amortized": "VERDICT r10 #3 closed: the "
-            "drift (mu,v) direction and the base-trained incremental "
-            "codebook are frozen artifacts (trained once per (sf,recipe) "
-            "in plans/artifacts.py, map-side applied after — the "
-            "production contract these specs model; the DuckDB oracle "
-            "still retrains independently so a stale cache would FAIL "
-            "the hash gate). First invocation pays training; min-of-k "
-            "prices the steady state: embedding_drift_buckets "
-            "6.06->0.77s in-suite, semantic_dedup_frozen_keep "
-            "6.03->2.12s (remaining cost is the real pair join: its per-pair "
-            "integer-cosine arithmetic is now salt-split 16 ways and "
-            "pinned to the shuffle width via dup_dominated(n_salt=16) — "
-            "AQE's byte-based coalescer had folded the 250k-pair join "
-            "onto 2 cores), semantic_dedup_incremental same treatment "
-            "(3.91->1.75s). First full r11 run: 104.77s over 82 (r10 "
-            "committed 118.14s over 81 + pca_topr_residual_norms new at "
-            "1.59s), passes' steal 5.1/34.5/8.4 core-s",
-            "r10_runs":"four full r10 runs in one day: 109.46s (total steal 140 core-s), 106.32s (573), 103.75s (270; per-pass 154/106/9.6) on the 79-query set, and the committed headline 118.63s on the GROWN 82-query set (+drift histogram 6.5s, frozen-keep gate 6.2s, quantile audit 0.9s) with per-pass steal 10.9/11.3/11.1 core-s (~0.3% — the judge-prescribed ~zero-steal embedded run). Shared-78 ratio vs r9's committed run = 1.06x at zero steal, i.e. today's host floor is ambient, not plan regression (all three same-day 79-query runs landed 1.04-1.10x regardless of steal). The lowest-steal discipline is AUTOMATED now: per-pass steal is recorded and a stolen final pass triggers extra passes, so min-of-k absorbs bursts. No plan changed for the worse; the only perf-affecting r10 code is new specs",
-            "dedup_image_phash_r9_attributed": "VERDICT r9 #2 closed: "
-            "solo min-of-6 at ~zero steal (0.99 stolen core-s, before-"
-            "load 0.68) trials [7.11, 2.21, 1.96, 1.89, 1.83, 1.78] -> "
-            "min 1.78s, within 1.31x of r8's 1.36s in-suite min; the "
-            "in-suite number recovered to 2.77s in the r10 headline "
-            "run. The r9 6.45s was hypervisor noise, not the r8c "
-            "restructure; plan unchanged (band-keyed equi-join, "
-            "plan-asserted)",
-            "r9_low_load_runs": "four r9 runs at before-load 0.9/0.5/1.2/"
-            "0.6 (the discipline VERDICT r6-r8 asked for) measured "
-            "105.8/93.3/77.6/70.7s on the shared-73 vs r8's 66.5s at "
-            "load 9.7. /proc/stat steal (896/422/4 stolen core-seconds "
-            "across runs 2-4, now recorded per-run) is the attribution: "
-            "the final run — steal ~zero — lands at 1.06x of r8 on the "
-            "shared-73 with dedup_image_phash's min back at 2.14s, and "
-            "the r1-gate ratio on the shared-17 at 0.88x, the round's "
-            "best. The earlier gaps were host noise, not plan "
-            "regressions; this run is the round's representative number",
-            "window_session": "r3->r4 0.40->0.85s was suite-load noise, not a "
-            "re-plan: solo min-of-6 at sf0.1 is 0.397s == r3, and in-suite "
-            "min with per-trial cache clearing is ~0.34s (VERDICT r4 #5)",
-            "r4_r5_regressions_attributed": "VERDICT r5 #2, solo min-of-6 at "
-            "sf0.1 each: text_tfidf 1.35s — its tf relation persists "
-            "internally (plans/pipeline.py tf.persist), so the r4 0.94s was "
-            "a cache-HIT min like triangle_count's; honest-cold ~1.4s is the "
-            "real number. bigram_lift 1.04s (r4 0.95 — within noise), "
-            "decontaminate_ngram 0.67s (r4 0.91 — noise, solo BEATS r4), "
-            "embedding_centroid 0.49s (r4 0.55 — noise). No plan changes; "
-            "nothing to fix",
-            "run_variance": "whole-suite totals on identical code varied "
-            "68-86s across four back-to-back r6 runs with measured "
-            "before-load 0.2-10 (hypervisor-level neighbors; loadavg "
-            "fields above attribute each run). Per-query SOLO min-of-6 "
-            "is the honest per-query signal; cross-round comparisons "
-            "should prefer the lowest-load run and treat <1.5x in-suite "
-            "deltas as noise unless a solo run confirms them",
-            "dedup_simhash_det_r6_attributed": "VERDICT r6 #2 (1.63s -> "
-            "5.87s in-suite, unattributed): solo min-of-6 at sf0.1, "
-            "loadavg ~1.7, measured 2026-08-14 trials "
-            "[7.34, 2.91, 2.60, 1.36, 1.43, 1.33] min 1.33s — BELOW the "
-            "r5 in-suite 1.63s. The r6 number was hypervisor neighbor "
-            "load (that run's before-load was 9.25); no plan change, "
-            "nothing to fix",
-            "dedup_ngram_jaccard_r6": "re-specified in r6 to the stop-"
-            "shingle-capped semantics (df<=10% mirrored in the oracle, "
-            "VERDICT r5 #1); the capped run pays a doc-frequency statistics "
-            "pass the uncapped r5 2.33s number never paid, so ~2.8s cold is "
-            "a different (scale-safe) query, not a regression; "
-            "shingle_containment and dedup_incremental got FASTER under the "
-            "same restructure (3.4->2.8s, 3.4->2.4s: broadcast anti-join "
-            "stop set + zero-exchange partitioned shingle cache)",
-            "methodology": "each trial starts from a cleared SQL cache so "
-            "min-of-3 always measures the full query, incl. any persist "
-            "the operator performs internally. Queries that persist an "
-            "intermediate (triangle_count, dedup_ngram_jaccard, "
-            "shingle_containment, knn_* via IVF) previously got min-of-3 "
-            "cache-HIT timings — Spark's CacheManager matches re-built "
-            "identical plans — so their r5 numbers read higher than r4 "
-            "(triangle_count 3.85->~6 cold, dedup_ngram_jaccard "
-            "1.49->~2.0) without any plan change; shingle_containment "
-            "dropped 5.22->~3.0 despite the stricter measure (stop-"
-            "shingle cap, VERDICT r4 #2/#3)",
-        },
     }
     out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
     try:

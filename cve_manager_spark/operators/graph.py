@@ -257,9 +257,9 @@ def k_core(
     materializes it, so per round exactly one job runs (measured on the
     graph_kcore edges at sf0.1, identical output hash: 2.34 -> 2.13 s
     min-of-6; a broadcast-anti-join-on-the-drop-set variant measured
-    slower, kcore_variants.py). Rounds are bounded by the peeling depth
-    (degeneracy ordering), which is ≤ a few dozen on real corpora;
-    raises if max_rounds is hit.
+    slower, OPTIMIZATION_r14.md "graph_kcore (k_core)"). Rounds are
+    bounded by the peeling depth (degeneracy ordering), which is ≤ a few
+    dozen on real corpora; raises if max_rounds is hit.
 
     Returns (node, degree) of the surviving core, degrees within it.
     """

@@ -22,9 +22,7 @@ Two families:
 Everything follows the determinism contract in plans/spec.py: exact
 DECIMAL money sums emitted as one final double cast, integer day/ppm
 arithmetic for derived ratios, total orders (unique tie-break) before
-every LIMIT.  Priorities were collapsed to 0 in round 7 once the
-verification backlog cleared (registry sorts by (tier, priority) with
-stable module order, which alone queues unverified specs correctly).
+every LIMIT.
 """
 
 from __future__ import annotations
@@ -35,34 +33,12 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cve_manager_spark.functions.helpers import dec, dec_sum, fan_out, values_relation
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.plans.corpus import _GINI_DOC
 from cve_manager_spark.sources.testdata import load_table, register_views
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(
-    name: str,
-    oracle: str | None,
-    doc: str = "",
-    tags: tuple[str, ...] = (),
-    priority: int = 0,
-):
-    def deco(fn):
-        SPECS.append(
-            QuerySpec(
-                name=name,
-                build=fn,
-                oracle=oracle,
-                doc=doc or (fn.__doc__ or ""),
-                tags=tags,
-                priority=priority,
-            )
-        )
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # exact order-independent revenue: SUM(extendedprice * (1 - discount))
@@ -1521,8 +1497,7 @@ def graph_degree_assortativity(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round-5 late tranche (was priority=5 while queued): queued BEHIND that round's 50-entry
-# driver window; locally oracle-gated now, driver-verified next round.
+# round-5 late tranche
 # ---------------------------------------------------------------------------
 
 _Q7_ORACLE = f"""
@@ -1553,7 +1528,6 @@ GROUP BY 1, 2, 3
     "attributes). The nation filters prune both customer and supplier "
     "sides before the fact join; exact-decimal revenue; year extraction "
     "is exact integer.",
-    priority=0,
 )
 def sql_tpch_q7(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -1602,7 +1576,6 @@ GROUP BY p_brand, p_type, p_size
     "predicates. The NOT-equal filters prune on the dim BEFORE the "
     "join; the distinct aggregate is the two-phase expand Spark plans "
     "for COUNT(DISTINCT) — exercised here grouped by three columns.",
-    priority=0,
 )
 def sql_tpch_q16(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(
@@ -1645,7 +1618,6 @@ GROUP BY c_mktsegment
     "can't drift) with a LEFT ANTI join against orders — the "
     "never-ordered check that a NOT IN would turn into a "
     "null-trapped nested loop.",
-    priority=0,
 )
 def sql_tpch_q22(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -1690,7 +1662,6 @@ FROM documents GROUP BY lang
     "token counts are in-row size() expressions over one scan (no "
     "explode — the corpus never leaves its rows); one partial+final "
     "hash aggregate on the tiny lang key.",
-    priority=0,
 )
 def tokenizer_fertility(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import token_count_bpe, token_count_ws
@@ -1735,7 +1706,6 @@ FROM d GROUP BY lang
     "budgeting. The share test is cross-multiplied integer arithmetic "
     "(n_stop·20 ≥ n_tok), counts computed in-row per document (no "
     "explode), one hash aggregate per lang.",
-    priority=0,
 )
 def lang_confusion_audit(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import STOPWORDS, words
@@ -1782,7 +1752,6 @@ GROUP BY o_custkey
     "One customer-partitioned LAG pass then a hash aggregate on the "
     "same key — both stages share one exchange; day deltas are exact "
     "integers, the mean divides the exact sum once.",
-    priority=0,
 )
 def customer_order_gap_stats(spark: SparkSession, sf: str) -> DataFrame:
     orders = load_table(spark, sf, "orders")
@@ -1806,8 +1775,7 @@ def customer_order_gap_stats(spark: SparkSession, sf: str) -> DataFrame:
 # round-5 completion tranche — the nine TPC-H faces still missing, closing
 # the 22/22 decision-support surface (q12 ships as the adapted q12lite; q2,
 # q9, q11, q16, q20 re-target partsupp semantics onto the lineitem bridge
-# since the testdata star schema has no partsupp table).  (was priority=6
-# while queued behind specs still awaiting their first driver verdict).
+# since the testdata star schema has no partsupp table).
 # ---------------------------------------------------------------------------
 
 _Q2_ORACLE = """
@@ -1850,7 +1818,6 @@ LIMIT 100
     "join-back is an equi-join on the part key, acctbal doubles pass "
     "through MIN untouched so cross-engine equality is exact. Total "
     "order (acctbal DESC, p_partkey, s_suppkey) before LIMIT 100.",
-    priority=0,
 )
 def sql_tpch_q2(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(
@@ -1936,7 +1903,6 @@ FROM vol GROUP BY o_year
     "pattern). Dims broadcast at their natural sizes, the selective "
     "p_type filter prunes the fact join via the part dim, and the "
     "two-year date filter reaches the orders scan.",
-    priority=0,
 )
 def sql_tpch_q8(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(F.col("p_type") == "ECONOMY")
@@ -2021,7 +1987,6 @@ GROUP BY nation, o_year
     "the two deterministic aggregates by one IEEE subtract/divide, "
     "identical on identical inputs. Part (LIKE-pruned) and nation "
     "broadcast; orders joins on the fact key to supply the year.",
-    priority=0,
 )
 def sql_tpch_q9(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(F.col("p_name").like("%widget%"))
@@ -2086,7 +2051,6 @@ WHERE val * (SELECT COUNT(*) FROM v) > 3 * (SELECT SUM(val) FROM v)
     "exact cross-multiplied decimals (val·n > 3·total, no division "
     "anywhere). The nation filter prunes suppliers before the fact "
     "join.",
-    priority=0,
 )
 def sql_tpch_q11(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
@@ -2136,7 +2100,6 @@ FROM cc GROUP BY c_count
     "per-customer count on the join key's own partitioning, then the "
     "tiny histogram rollup. COUNT(o_orderkey) not COUNT(*), so the "
     "null row of an orderless customer counts as zero.",
-    priority=0,
 )
 def sql_tpch_q13(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -2182,7 +2145,6 @@ WHERE total_rev = (SELECT MAX(total_rev) FROM rev)
     "bitwise); the supplier dim joins only to label the survivors. "
     "No LIMIT: the equality predicate itself is the selection, and "
     "ties all surface (deterministic set semantics).",
-    priority=0,
 )
 def sql_tpch_q15(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem").where(
@@ -2235,7 +2197,6 @@ WHERE CAST(l_quantity AS BIGINT) * 5 * cnt < sq
     "~1/25 before the aggregate, so the join-back probe side is small; "
     "revenue is an exact decimal sum. (No LIMIT — the final row is a "
     "global 1-row aggregate.)",
-    priority=0,
 )
 def sql_tpch_q17(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(F.col("p_brand") == "Brand#5")
@@ -2293,7 +2254,6 @@ WHERE n_name = 'NATION_3'
     "never duplicates a supplier however many parts qualify. The "
     "nation filter broadcasts; the p_name LIKE prefix filter prunes "
     "the part dim before the fact join.",
-    priority=0,
 )
 def sql_tpch_q20(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part").where(F.col("p_name").like("small%"))
@@ -2354,7 +2314,6 @@ LIMIT 100
     "relation. The base fact⋈orders join computes lateness once; the "
     "nation filter broadcasts into the supplier probe. Total order "
     "(numwait DESC, s_suppkey) before LIMIT 100.",
-    priority=0,
 )
 def sql_tpch_q21(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
@@ -2447,7 +2406,6 @@ GROUP BY ex.doc_id
     "shingle definition (operators/dedup.word_shingles, one codegen "
     "regex pass) as the containment/Jaccard family, so the novelty "
     "report prices exactly the shingles those operators would join on.",
-    priority=0,
 )
 def shingle_novelty(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import word_shingles
@@ -2492,7 +2450,6 @@ FROM g GROUP BY n
     "chained hash aggregates: the digest group-by is the only "
     "data-sized shuffle (and ships 32-byte digests, not text); the "
     "count-of-counts input is one row per distinct document.",
-    priority=0,
 )
 def dup_cluster_size_hist(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
@@ -2535,7 +2492,6 @@ FROM documents GROUP BY source
     "All counts are in-row size(regexp_extract_all) expressions over "
     "one scan — the corpus never explodes — and one hash aggregate on "
     "the tiny source key; ratios are exact integer ppm.",
-    priority=0,
 )
 def pii_density_by_source(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import token_count_ws
@@ -2599,7 +2555,6 @@ FROM g GROUP BY k
     "by anyone holding the quasi-identifier; a release gate reads "
     "'no rows below k=5' straight off this histogram. One group-by "
     "over the dimension table + a bounded re-aggregate.",
-    priority=5,
 )
 def k_anonymity_audit(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -2633,7 +2588,6 @@ GROUP BY c.c_nationkey, c.c_mktsegment
     "group the member/order counts and the distinct sensitive-value "
     "count; l=1 groups are the leak. One fact join + one group-by; "
     "the group relation is dimension-bounded.",
-    priority=5,
 )
 def l_diversity_audit(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -2681,7 +2635,6 @@ FROM g
     "decisions. The band is FLOOR(x*100) exact cents trunc-divided "
     "(engine-identical on negative balances); output is one summary "
     "row of exact integers/ppm.",
-    priority=5,
 )
 def quasi_id_uniqueness(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -2772,7 +2725,6 @@ FROM cum GROUP BY c_nationkey, c_mktsegment
     "k and l pass. Plan: one fact group-by; the 5-row global "
     "distribution broadcasts onto the dimension-bounded group grid, "
     "and the EMD window runs over groups x 5 rows, never facts.",
-    priority=5,
 )
 def t_closeness_audit(spark: SparkSession, sf: str) -> DataFrame:
     cust = load_table(spark, sf, "customer")
@@ -2865,7 +2817,6 @@ FROM cnt
     "conditional-aggregate pass with the 3-row estimate relation "
     "broadcast — the full table is scanned exactly twice regardless "
     "of how many quantiles are audited.",
-    priority=7,
 )
 def hash_sample_quantile_error(spark: SparkSession, sf: str) -> DataFrame:
     k = 256
@@ -2976,7 +2927,6 @@ FROM cnt
     "sampling family. Read next to hash_sample_quantile_error: that "
     "is the production gate at the chosen k, this is how k gets "
     "chosen.",
-    priority=7,
 )
 def sample_size_quantile_sweep(spark: SparkSession, sf: str) -> DataFrame:
     kmax = 1024
@@ -5170,7 +5120,6 @@ FROM cum GROUP BY user_id
     "(user, day) aggregate, a broadcast-sized per-user totals join, "
     "and a per-user day window — the same keys, so AQE coalesces to "
     "one exchange.",
-    priority=1,
 )
 def events_cusum_extremes(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -5230,7 +5179,6 @@ FROM agg
     "engines bucket identically; the Benford reference ppm is a "
     "python-precomputed constant table inlined as the SAME literal "
     "CASE in both engines. One narrow pass + a 9-row aggregate.",
-    priority=1,
 )
 def events_benford_first_digit(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -5285,7 +5233,6 @@ LEFT JOIN c ON n.n_nationkey = c.nk
     "report. Two independent fact aggregates reduce each table to "
     "<= 25 rows BEFORE any join — the join inputs are dimension-sized "
     "regardless of fact scale.",
-    priority=1,
 )
 def nation_balance_sheet(spark: SparkSession, sf: str) -> DataFrame:
     sup = load_table(spark, sf, "supplier")
@@ -5341,7 +5288,6 @@ FROM agg
     "window runs on the <= 45-row aggregate. The segment dimension "
     "lives on the customer row — this is the canonical 'enrich facts "
     "with a customer attribute then profile' shape.",
-    priority=1,
 )
 def segment_value_profile(spark: SparkSession, sf: str) -> DataFrame:
     orders = load_table(spark, sf, "orders")
@@ -5407,7 +5353,6 @@ GROUP BY c.user_id
     "unigram_entropy_by_lang recipe), so the sum is order-independent. "
     "Both aggregates and the totals join share the user_id key — one "
     "shuffle, zero extra exchanges.",
-    priority=1,
 )
 def user_event_entropy(spark: SparkSession, sf: str) -> DataFrame:
     ev = fan_out(load_table(spark, sf, "events"))
@@ -5455,7 +5400,6 @@ FROM c
     "aggregate, and the conditional total is a window over the "
     "|types|^2-row result — nothing scales with the corpus but the "
     "first sort.",
-    priority=1,
 )
 def events_markov_2step(spark: SparkSession, sf: str) -> DataFrame:
     ev = fan_out(load_table(spark, sf, "events"))
@@ -5510,7 +5454,6 @@ FROM r GROUP BY segment
     "exact integer cents via FLOOR(x*100) (explicit floor: Spark "
     "truncates decimal->bigint casts while DuckDB rounds, so the "
     "recipe forces the same floor on both). " + _GINI_DOC,
-    priority=1,
 )
 def order_value_gini_by_segment(spark: SparkSession, sf: str) -> DataFrame:
     o = fan_out(load_table(spark, sf, "orders"))
@@ -5578,7 +5521,6 @@ FROM c
     "measures the consequence, this measures the cause). n_at_risk is "
     "a descending-band cumulative window; gaps from the one "
     "user-partitioned LAG pass (epoch_us recipe).",
-    priority=1,
 )
 def interarrival_hazard(spark: SparkSession, sf: str) -> DataFrame:
     ev = fan_out(load_table(spark, sf, "events"))
@@ -5656,7 +5598,6 @@ FROM g
     "and the cumulative window sum cast to double only at emission. "
     "One first-order aggregate joined back customer-keyed, one "
     "(cohort, age) aggregate, one bounded window.",
-    priority=1,
 )
 def cohort_ltv_matrix(spark: SparkSession, sf: str) -> DataFrame:
     o = fan_out(load_table(spark, sf, "orders"))
@@ -5727,7 +5668,6 @@ GROUP BY n.n_name
     "via one nation-partitioned window total, and HHI is a BIGINT "
     "square-sum. One lineitem aggregate + a broadcast supplier/nation "
     "dim join.",
-    priority=1,
 )
 def supplier_hhi_by_nation(spark: SparkSession, sf: str) -> DataFrame:
     li = fan_out(load_table(spark, sf, "lineitem"))
@@ -5801,7 +5741,6 @@ GROUP BY c.t1
     "compressibility number that complements events_markov_2step's "
     "raw transition table. 6dp-DECIMAL entropy recipe; one LAG pass, "
     "then aggregates over |types|^2 rows.",
-    priority=1,
 )
 def markov_conditional_entropy(spark: SparkSession, sf: str) -> DataFrame:
     ev = fan_out(load_table(spark, sf, "events"))
@@ -5887,7 +5826,6 @@ FROM tot CROSS JOIN top
     "saturate past 2^63 pairs — beyond that consumers read the "
     "ratios. One key-grain aggregate; the top-10 is "
     "TakeOrderedAndProject; everything after is 1-row broadcast math.",
-    priority=5,
 )
 def join_cardinality_audit(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")

@@ -20,18 +20,11 @@ from cve_manager_spark.functions.helpers import dec, dec_sum, fan_out, values_re
 from cve_manager_spark.operators import dedup as D
 from cve_manager_spark.operators import similarity as S
 from cve_manager_spark.operators import text as T
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = (), priority: int = 0):
-    def deco(fn):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, priority=priority))
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # ---------------------------------------------------------------------------
@@ -621,7 +614,6 @@ def _shingle_profile_duck(n: int) -> str:
     "production n (usually 5-13 words) gets picked for a corpus "
     "WITHOUT running the full pair join at each candidate n. "
     "Shingles travel as md5 digests; one digest-keyed count per n.",
-    priority=6,
 )
 def shingle_size_sweep(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -1062,7 +1054,6 @@ GROUP BY th.threshold
     "spine broadcasts into a conditional aggregate — never five "
     "scans). Read next to quality_score_deciles: the deciles say "
     "where the mass IS, this says what each proposed gate KEEPS.",
-    priority=6,
 )
 def quality_threshold_sweep(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -1148,7 +1139,6 @@ GROUP BY 1, 2
     "digest test is a 16-byte-digest groupBy + join-back (never a "
     "self-join of text), MinHash is the banded directional join, and "
     "the cross-tab is a 4-key aggregate.",
-    priority=7,
 )
 def dedup_modality_agreement(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import (
@@ -2756,7 +2746,6 @@ GROUP BY p.doc_id, p.source
     "same key (co-partitioned), plus a broadcast ~20-row per-source "
     "doc-count dim; at 100 TB the boilerplate set is the banded join "
     "key, never a pairwise comparison.",
-    priority=1,
 )
 def boilerplate_ngrams(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -2831,7 +2820,6 @@ FROM pfx GROUP BY prefix HAVING COUNT(*) >= 2
     "scraped-template / mirror-page detector that runs BEFORE "
     "pairwise near-dup at 100 TB because its key is O(1) per doc and "
     "the bucket join is one exact-key aggregate, no banding needed.",
-    priority=1,
 )
 def prefix_bucket_sizes(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -2879,7 +2867,6 @@ FROM flows GROUP BY src_a, src_b
     "ARITHMETIC over per-(prefix, source) counts (one aggregate + one "
     "equi-self-join on the prefix key); no doc-level pair is ever "
     "materialized, so a viral bucket costs integers, not O(n^2) rows.",
-    priority=1,
 )
 def prefix_source_flow(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -2952,7 +2939,6 @@ GROUP BY d.lang, p.pred_lang
     "— the audit you run before using heuristic lang-id as a 100 TB "
     "routing key. One narrow map pass + a <= 25-cell aggregate; the "
     "share window runs on the aggregate only.",
-    priority=1,
 )
 def langid_confusion(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators import text as T
@@ -3003,7 +2989,6 @@ FROM sh
     "Zero doc-grain shuffle — at 100 TB this is pure map-side compute "
     "like top_word_mass_bands/dup_bigram_mass, completing the "
     "unigram/bigram/trigram repetition ladder.",
-    priority=1,
 )
 def max_trigram_repeat(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3059,7 +3044,6 @@ FROM packed GROUP BY shard, seq_id
     "pathological shards). Reuses the registered packing plan verbatim "
     "and adds one aggregate on the (shard, seq) key the window "
     "already partitioned by.",
-    priority=1,
 )
 def packing_utilization(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.plans.corpus import pack_sequences
@@ -3111,7 +3095,6 @@ FROM agg
     "at-scale substitute for an exact per-doc Pareto sort: the "
     "cumulative window runs over <= 6 band rows, row-grain data never "
     "passes a global sort.",
-    priority=1,
 )
 def doc_length_mass_bands(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3203,7 +3186,6 @@ GROUP BY w.source
     "(window)-keyed aggregate re-joined on the same key — "
     "co-partitioned, no pairwise comparison anywhere (at 100 TB the "
     "window hash is the shuffle key exactly like the shingle recipes).",
-    priority=1,
 )
 def char_window_xdoc(spark: SparkSession, sf: str) -> DataFrame:
     w = _charwin_df(spark, sf)
@@ -3246,7 +3228,6 @@ FROM (
     "exactly the text char-grain dedup recovers corpus-wide where "
     "per-source boilerplate rules cannot. Two chained hash aggregates "
     "on (win) then (n_sources); no joins.",
-    priority=1,
 )
 def char_window_source_leakage(spark: SparkSession, sf: str) -> DataFrame:
     w = _charwin_df(spark, sf)
@@ -3298,7 +3279,6 @@ FROM q
     "BIGINT arithmetic. Complements mix_budget (fixed-share budgeter): "
     "this derives the shares. One groupBy(source) aggregate + a 20-row "
     "broadcast total.",
-    priority=1,
 )
 def mix_temperature(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3361,7 +3341,6 @@ FROM b GROUP BY source, band
     "integer band ladder, one in-row expression + one (source, band) "
     "aggregate; band count is bounded (<= 20) so the result never "
     "scales with the corpus.",
-    priority=1,
 )
 def tokens_per_kchar_bands(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3452,7 +3431,6 @@ FROM terms
     "generated, not observed — missing bands surface as zero rows "
     "instead of silently shrinking the sum. One scan + a 20-row "
     "broadcast join; nothing scales past the band count.",
-    priority=1,
 )
 def split_psi(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.plans.corpus import _BUCKET_SPARK
@@ -3545,7 +3523,6 @@ GROUP BY sw.source
     "p*ln(p/q) term rounded to 6dp, summed as exact DECIMAL; counts "
     "join word-keyed (co-partitioned with the count aggregate), "
     "totals ride a 20-row broadcast + a 1-row cross join.",
-    priority=1,
 )
 def source_unigram_kl(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -3613,7 +3590,6 @@ FROM r GROUP BY source
     "mega-docs (which dominate training batches and skew dedup "
     "savings)? " + _GINI_DOC + " One source-partitioned window sort "
     "then a per-source fold.",
-    priority=1,
 )
 def token_gini_by_source(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3686,7 +3662,6 @@ FROM g
     "0.9995e6 sets the tokenizer's byte-fallback alphabet. The "
     "explode is one map-side-combinable char count (alphabet-bounded "
     "output), then windows over <= 5 rows.",
-    priority=1,
 )
 def char_coverage_curve(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3780,7 +3755,6 @@ GROUP BY mx.source, mx.ns, mx.mdd
     "blend'. The value spine is sources x distinct-lengths (bounded: "
     "lengths are data-bounded, sources ~20); cumulative sums are two "
     "window passes.",
-    priority=1,
 )
 def length_ks_by_source(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3923,7 +3897,6 @@ FROM sc GROUP BY source, band
     "binary-string length (floor(log2(T div c)) = length(bin(..))-1), "
     "so the whole dial is exact integers: two token-keyed shuffles + "
     "one doc aggregate, the corpus total a broadcast scalar.",
-    priority=2,
 )
 def unigram_surprisal_bands(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -3971,7 +3944,6 @@ FROM bb GROUP BY doc_id
     "pass); bigrams are built IN-ROW (indexed transform over the token "
     "array, no self-join), so the plan is one pair-keyed count + one "
     "instance join + a doc aggregate.",
-    priority=2,
 )
 def bigram_surprisal_score(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4045,7 +4017,6 @@ GROUP BY band, ql.label
     "same surprisal bands as 'low', the two signals are independent "
     "and compose; if they collapse onto a diagonal, one is redundant. "
     "Both sides are exact integers; the join is doc-keyed.",
-    priority=2,
 )
 def surprisal_quality_matrix(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.plans.corpus import _quality_scored
@@ -4079,7 +4050,6 @@ FROM sc GROUP BY source
     "picked off the unigram_surprisal_bands histogram the same way). "
     "Reads the same integer surprisal pipeline; the threshold "
     "compares millibits, so no rounding ambiguity.",
-    priority=2,
 )
 def perplexity_filter_rate(spark: SparkSession, sf: str) -> DataFrame:
     docs = fan_out(load_table(spark, sf, "documents"))
@@ -4128,7 +4098,6 @@ GROUP BY is_contaminated
     "doc sets (running only one under-cleans). Composition face: the "
     "broadcast eval probe from eval_overlap_score joined doc-grain "
     "onto the surprisal relation, two exact-integer aggregates.",
-    priority=2,
 )
 def surprisal_contamination_interaction(
     spark: SparkSession, sf: str
@@ -4219,7 +4188,6 @@ FROM kp GROUP BY source, label
     "partitionings, and composable with the split assigner (different "
     "digest positions). Emits per (source, label) total/kept/ppm. "
     "Zero shuffles beyond the final small aggregate.",
-    priority=2,
 )
 def quality_importance_sample(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.plans.corpus import _quality_scored
@@ -4293,7 +4261,6 @@ FROM s
     "(source, word)-keyed count; the fit itself touches only band "
     "rows — the histogram-not-sort discipline (quality_score_deciles) "
     "applied to vocabulary statistics.",
-    priority=2,
 )
 def zipf_band_slope_by_source(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4360,7 +4327,6 @@ GROUP BY tri.source
     "(16 bytes, never a long n-gram string); one digest-keyed "
     "source-count + one join back — the same two-aggregate shape as "
     "split_dup_leakage at trigram grain.",
-    priority=2,
 )
 def trigram_novelty_by_source(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import word_ngram_windows
@@ -4425,7 +4391,6 @@ GROUP BY e.doc_id
     "signal. Zero-hit docs are kept (LEFT join against the broadcast "
     "eval set); shingles are built in-row, so the plan is one "
     "broadcast probe + a doc-grain aggregate.",
-    priority=2,
 )
 def eval_overlap_score(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import word_ngram_windows
@@ -4524,7 +4489,6 @@ FROM bb GROUP BY doc_id
     "mean millibits — still pure integer log2 via binary length, so "
     "the interpolated score hash-verifies. Joins: bigram counts, "
     "prefix counts (reaggregated from bigram counts), unigram counts.",
-    priority=3,
 )
 def bigram_backoff_surprisal(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4605,7 +4569,6 @@ FROM bits GROUP BY source
     "stopword channel looks normal — the split localizes what a "
     "blended perplexity score averages away. Same integer-log2 "
     "pipeline; the channel flag is the shared 10-word stopword list.",
-    priority=3,
 )
 def stopword_surprisal_split(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import _is_stopword, words
@@ -4679,7 +4642,6 @@ FROM d GROUP BY source
     "BIGINT) emitted via the one-final-double-cast convention. "
     "Downstream computes r = (nSxy-SxSy)/sqrt(...) — the sqrt stays "
     "out of the engine so the emitted relation is exact.",
-    priority=3,
 )
 def corr_surprisal_length(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.plans.corpus import _doc_surprisal
@@ -4738,7 +4700,6 @@ GROUP BY seg.source
     "+ one join back. Complements char_window_xdoc (overlapping "
     "char-grain windows, leakage framing) with the non-overlapping "
     "token grain and savings framing.",
-    priority=3,
 )
 def segment_dedup_savings(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4786,7 +4747,6 @@ ORDER BY n_occurrences DESC, g LIMIT 20
     "via orderBy().limit() = TakeOrderedAndProject (the "
     "split_drift_topwords lesson: never a row_number window over the "
     "segment-vocabulary relation, which is corpus-sized at 100 TB).",
-    priority=3,
 )
 def boilerplate_segments_topk(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4841,7 +4801,6 @@ GROUP BY pf.source
     "shifts token share toward whichever source tends to hold the "
     "lowest ids (usually the earliest-crawled). One digest aggregate "
     "+ one keeper join.",
-    priority=3,
 )
 def dedup_survivorship_bias(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import words
@@ -4920,7 +4879,6 @@ FROM r0 JOIN r1 ON r0.doc_id = r1.doc_id
     "Ranking is digest-prefix-bucketed (pure function of the key — "
     "deterministic across actions/retries, unlike sampled range "
     "partitioning), never a driver or single-partition sort.",
-    priority=8,
 )
 def epoch_shuffle_blocks(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents").select("doc_id")

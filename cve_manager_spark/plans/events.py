@@ -19,18 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from cve_manager_spark.functions.helpers import dec_sum
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = (), priority: int = 0):
-    def deco(fn):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, priority=priority))
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 @_register(
@@ -353,7 +346,6 @@ FROM events GROUP BY day, event_type
     "streaming rollup sink in streaming/sinks.py, stated as a "
     "hash-checked batch face. Delta cost is delta-sized, never "
     "view-sized.",
-    priority=3,
 )
 def ivm_rollup_delta(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.functions.helpers import dec

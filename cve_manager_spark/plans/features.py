@@ -26,33 +26,11 @@ from pyspark.sql import functions as F
 
 from cve_manager_spark.functions.helpers import dec_sum, fan_out
 from cve_manager_spark.operators import text as T
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(
-    name: str,
-    oracle: str | None,
-    doc: str = "",
-    tags: tuple[str, ...] = (),
-    priority: int = 0,
-):
-    def deco(fn):
-        SPECS.append(
-            QuerySpec(
-                name=name,
-                build=fn,
-                oracle=oracle,
-                doc=doc or (fn.__doc__ or ""),
-                tags=tags,
-                priority=priority,
-            )
-        )
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # ---------------------------------------------------------------------------
@@ -1534,9 +1512,7 @@ def value_mad(spark: SparkSession, sf: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# round 2c tranche — queued (was priority=2) behind the then-current verification
-# backlog (registry.py sorts (tier, priority); the local DuckDB replica
-# gates these until the driver window rotates to them).
+# round 2c tranche
 # ---------------------------------------------------------------------------
 
 _TRIANGLE_ORACLE = """
@@ -1587,7 +1563,6 @@ FROM nn CROSS JOIN ne CROSS JOIN tri
     "neighbors intersect empty, so the join is inner. Persisted: the "
     "deduped edge list (feeds stats + degrees) and the adjacency "
     "(build side + probe side of the closure).",
-    priority=0,
 )
 def triangle_count(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark import StorageLevel
@@ -1610,7 +1585,8 @@ def triangle_count(spark: SparkSession, sf: str) -> DataFrame:
         .groupBy("o")
         .agg(F.sort_array(F.collect_set("l_partkey")).alias("ps"))
     )
-    # r14 kernel shape (scripts/tri_variants.py, identical stats row):
+    # r14 kernel shape (OPTIMIZATION_r14.md "triangle_count — pair-generation
+    # kernel rewritten", identical stats row):
     # explode TWICE — position first, then the sorted tail slice — so
     # pair emission allocates only primitive tail arrays (k²/2 longs
     # per order in total). The previous single-explode built the full
@@ -1707,7 +1683,6 @@ FROM r WHERE rk = 1
     "user-keyed exchange and the per-user sort is bounded by active "
     "days, never raw event volume. Deterministic tie-break: earliest "
     "streak wins.",
-    priority=0,
 )
 def longest_streak(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -1765,7 +1740,6 @@ FROM o
     "integer microseconds; the window partitions on the natural "
     "high-cardinality user key, so the plan is one balanced exchange at "
     "any scale.",
-    priority=0,
 )
 def nearest_event(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -1830,7 +1804,6 @@ FROM o WHERE 2 * cum >= tot GROUP BY flag
     "arithmetic is BIGINT (weights floor-quantized to cents); the "
     "running weight crosses tot/2 strictly inside one value bucket, so "
     "the row-level oracle and the histogram fold agree exactly.",
-    priority=0,
 )
 def weighted_median(spark: SparkSession, sf: str) -> DataFrame:
     li = load_table(spark, sf, "lineitem")
@@ -1904,7 +1877,6 @@ FROM q
     "ties, and the error sum is an integer fold, so no float "
     "accumulation order exists. The m=0 guard keeps all-zero vectors "
     "representable (q=0, error 0).",
-    priority=0,
 )
 def embedding_quantize(spark: SparkSession, sf: str) -> DataFrame:
     emb = load_table(spark, sf, "embeddings")
@@ -3171,8 +3143,6 @@ def join_null_safe(spark: SparkSession, sf: str) -> DataFrame:
 
 # ---------------------------------------------------------------------------
 # round 5 tranche — corpus observability, dedup funnel, retrieval, pareto
-# (was priority=3: the r4 backlog of 12 unverified queries plus these fill the
-# driver's 50-slot window; these queue behind the backlog within tier 0).
 # ---------------------------------------------------------------------------
 
 _STOP_SHINGLE_ORACLE = """
@@ -3211,7 +3181,6 @@ LIMIT 50
     "1-row cross join (no driver scalar), and top-50 plans as "
     "TakeOrderedAndProject with a unique (df desc, shingle) total "
     "order. Integer div, no float anywhere.",
-    priority=0,
 )
 def stop_shingle_report(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import word_shingles
@@ -3255,7 +3224,6 @@ FROM tok GROUP BY 1
     "collapses the token stream map-side to ≤ max-length rows per "
     "task, so the shuffle carries a few dozen rows per partition "
     "regardless of corpus size.",
-    priority=0,
 )
 def token_len_histogram(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
@@ -3295,7 +3263,6 @@ UNION ALL SELECT '3_normalized', n3 FROM a
     "JVM-side hashes so the distinct state is bounded per stage; the "
     "4-row unpivot is an in-row stack. Same single-scan discipline as "
     "table_profile.",
-    priority=0,
 )
 def dedup_cascade_funnel(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
@@ -3334,7 +3301,6 @@ FROM m
     "users spread (gini→max). Two cascading hash aggregates, both "
     "map-side partial — the second runs over |users|×|types| rows. "
     "Every operand BIGINT; zero float drift possible.",
-    priority=0,
 )
 def user_type_gini(spark: SparkSession, sf: str) -> DataFrame:
     ev = load_table(spark, sf, "events")
@@ -3385,7 +3351,6 @@ FROM r WHERE 2 * cum >= total GROUP BY 1
     "answer is a priority-cardinality aggregate. Exact integer cents "
     "(floor ×100 — floor, not cast: DuckDB rounds, Spark truncates); "
     "ties broken on customer key.",
-    priority=0,
 )
 def orders_pareto(spark: SparkSession, sf: str) -> DataFrame:
     orders = load_table(spark, sf, "orders")
@@ -3467,7 +3432,6 @@ LIMIT 20
     "cross-engine, which is why idf is the rational (N-df+.5)/(df+.5) "
     "rather than its log: ln() is libm-dependent); top-20 plans as "
     "TakeOrderedAndProject with doc_id tie-break. k1=1.2, b=0.75.",
-    priority=0,
 )
 def bm25_topk(spark: SparkSession, sf: str) -> DataFrame:
     docs = load_table(spark, sf, "documents")
@@ -3555,7 +3519,6 @@ GROUP BY 1, 2
     "is tiny after the containment threshold, so the two attribution "
     "joins shuffle pair-cardinality rows against a projected (doc_id, "
     "source) relation; the matrix aggregate is source²-bounded.",
-    priority=0,
 )
 def near_dup_source_matrix(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import containment_pairs
@@ -3594,7 +3557,6 @@ FROM c
     "cardinality, then a brand-partitioned window SUM over that "
     "reduced relation supplies the denominator on the same exchange. "
     "Integer div; no floats.",
-    priority=0,
 )
 def part_type_share(spark: SparkSession, sf: str) -> DataFrame:
     part = load_table(spark, sf, "part")
@@ -3681,7 +3643,6 @@ GROUP BY n.source
     "self-paired), or kept; rolled up per source. This is the shape a "
     "recurring crawl runs every ingest: the increment pays "
     "|new|x|snapshot| bucketed work, not |corpus|^2.",
-    priority=0,
 )
 def dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators import dedup as D
@@ -3748,7 +3709,6 @@ FROM events GROUP BY 1
     "only the final day grain casts to double. The oracle computes "
     "the day grain DIRECTLY from raw events — the driver hash proves "
     "cascaded partials lose nothing.",
-    priority=0,
 )
 def rollup_cascade(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.functions.helpers import dec
@@ -3813,7 +3773,6 @@ WHERE len(list_filter(range(1, 65),
     "twin of the xxhash64 production `dedup_simhash`, same role "
     "`dedup_minhash_det` plays for MinHash. "
     "operators/dedup.simhash_det_pairs.",
-    priority=0,
 )
 def dedup_simhash_det(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators import dedup as D
@@ -3846,7 +3805,6 @@ FROM v GROUP BY doc_id, frame_idx
     "frame_sample's 1-to-many-payloads). Stub payload is the UTF-8 "
     "text bytes, so the oracle prices the identical windows from "
     "ascii codes; a real decoder swaps in behind the same schema.",
-    priority=0,
 )
 def multimodal_audio_energy(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.multimodal import (
@@ -3896,7 +3854,6 @@ SELECT a AS node, CAST(COUNT(*) AS BIGINT) AS degree FROM e4 GROUP BY a
     "screen before community detection. Spark iterates to the TRUE "
     "fixpoint; the oracle unrolls four peels, which this graph "
     "converges inside (the differential itself proves it).",
-    priority=0,
 )
 def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.graph import k_core
@@ -3922,7 +3879,6 @@ def graph_kcore(spark: SparkSession, sf: str) -> DataFrame:
     "key) and ann_ivf (probe fraction). Rows-only by design like its "
     "siblings (approximate ranking has no SQL oracle); determinism "
     "and a recall floor are pinned in tests/test_ann_quality.py.",
-    priority=0,
 )
 def ann_pq(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.similarity import pq_topk, pq_train
@@ -3947,7 +3903,6 @@ def ann_pq(spark: SparkSession, sf: str) -> DataFrame:
     "sequence is pinned against a hand-computed example and a "
     "double-run determinism check in tests/test_operators.py. "
     "operators/text.bpe_train.",
-    priority=0,
 )
 def bpe_merges(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.text import bpe_train
@@ -4068,7 +4023,6 @@ WHERE v0.doc_id IS NULL OR v2.doc_id IS NULL OR v0.digest <> v2.digest
     "digest) before the full outer join; at 100 TB the scratch table "
     "is the real lake and the diff is one hash join on the key, "
     "partition-pruned to the manifests' file lists.",
-    priority=7,
 )
 def timetravel_snapshot_diff(spark: SparkSession, sf: str) -> DataFrame:
     log = _timetravel_log(spark, sf)
@@ -4111,7 +4065,6 @@ SELECT 2 AS version,
     "updates replace in place, leaving the count unchanged). Each "
     "count is one metadata-pruned scan of that manifest's file list; "
     "the union is k tiny rows for k versions.",
-    priority=7,
 )
 def timetravel_version_counts(spark: SparkSession, sf: str) -> DataFrame:
     log = _timetravel_log(spark, sf)
@@ -4202,7 +4155,6 @@ FROM j GROUP BY 1
     "x supplier), so the blowup is bounded by per-part supplier fan-out "
     "— on skewed real graphs cap that fan-out df-style exactly like the "
     "shingle stop-lists; degrees ride in on two co-partitioned joins.",
-    priority=1,
 )
 def graph_neighbor_jaccard(spark: SparkSession, sf: str) -> DataFrame:
     li = fan_out(load_table(spark, sf, "lineitem"))
@@ -4270,7 +4222,6 @@ _FD_CANDIDATES = [
     "checkers miss. Per candidate: one (lhs)-keyed distinct-count "
     "aggregate folded to a single row — candidates union to a "
     "4-row report, each independently parallel.",
-    priority=1,
 )
 def fd_profile(spark: SparkSession, sf: str) -> DataFrame:
     def prof(name: str, table: str, lhs: str, rhs: str) -> DataFrame:
@@ -4338,7 +4289,6 @@ FROM c ASOF LEFT JOIN p ON c.user_id = p.user_id AND c.ts >= p.ts
     "user_id shuffle, no per-row probes; equal-ts purchase duplicates "
     "are deduplicated to max event_id first so both engines pick the "
     "same row.",
-    priority=1,
 )
 def scd2_asof_lookup(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.asof import asof_join
@@ -4413,7 +4363,6 @@ FROM j
     "value past tolerance while KEEPING the row (left semantics); "
     "oracle = DuckDB native ASOF LEFT JOIN + an epoch_us interval "
     "guard. Same one-shuffle union+window plan as scd2_asof_lookup.",
-    priority=1,
 )
 def scd2_asof_tolerance(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.asof import asof_join
@@ -4512,7 +4461,6 @@ FROM h{iterations} JOIN a{iterations} ON h{iterations}.node = a{iterations}.node
     "where a multiply-then-divide rescale wraps at ~1e7 nodes. Two "
     "O(|E|) join+aggregate pairs per iteration; the max rides a "
     "broadcast scalar.",
-    priority=3,
 )
 def hits_hubs_authorities(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.graph import hits_int
@@ -4557,7 +4505,6 @@ FROM d WHERE doc_id % 17 = 0
     "manifest are read; shared files never open — hash-verifies end "
     "to end. At 100 TB this is the incremental-consumer contract: "
     "CDF cost rides |changed data|, never |table|.",
-    priority=7,
 )
 def timetravel_changes(spark: SparkSession, sf: str) -> DataFrame:
     log = _timetravel_log(spark, sf)
@@ -4659,7 +4606,6 @@ SELECT doc_id, bucket, digest FROM allr WHERE doc_id % 5 <> 0
     "end. At 100 TB this is Iceberg-style partition evolution: "
     "re-layout without rewriting history, migration deferred to "
     "compaction.",
-    priority=8,
 )
 def timetravel_partition_evolution(
     spark: SparkSession, sf: str
@@ -4699,7 +4645,6 @@ FROM d WHERE doc_id % 3 = 0 AND doc_id % 5 <> 0
     "the guarantee that re-layout does not break incremental "
     "consumers: a CDC reader tailing the table across an evolution "
     "sees logical changes only, never the migration.",
-    priority=8,
 )
 def timetravel_evolution_cdf(spark: SparkSession, sf: str) -> DataFrame:
     log = _evolution_log(spark, sf)
@@ -4839,7 +4784,6 @@ WHERE o.o_orderkey % 7 <> 0
     "answer to the facts+dim+view atomicity gap single-table logs "
     "share — commit cost is one O(#tables) JSON hard-link, staging "
     "stays fully parallel.",
-    priority=8,
 )
 def catalog_txn_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog
@@ -4867,7 +4811,6 @@ def catalog_txn_snapshot(spark: SparkSession, sf: str) -> DataFrame:
     "view and the recompute. At 100 TB this is the materialized-view "
     "refresh pattern: staging (the join) runs fully parallel, and "
     "visibility is one O(#tables) catalog hard-link.",
-    priority=8,
 )
 def catalog_view_atomic(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog
@@ -4990,7 +4933,6 @@ WHERE s.s_suppkey % 7 <> 0
     "registration cost is one O(#tables) JSON hard-link, and "
     "retention floors travel as VERSION numbers so vacuum cannot "
     "race a landing commit off a pinned manifest.",
-    priority=8,
 )
 def catalog_add_drop_table(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog
@@ -5031,7 +4973,6 @@ FROM orders WHERE o_orderkey % 7 = 0
     "leaving between the pins, and a downstream join materializer "
     "can consume facts+dim deltas that provably belong to the same "
     "atomic history.",
-    priority=8,
 )
 def catalog_cdf_atomic(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog
@@ -5133,7 +5074,6 @@ def _catalog_branch_scratch(spark: SparkSession, sf: str) -> str:
     "O(changed files) links + one manifest per changed table, and "
     "cross-branch file liveness is automatic (an inode survives "
     "until its last directory entry drops).",
-    priority=8,
 )
 def catalog_branch_merge(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog
@@ -5249,7 +5189,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     "batch chopping and interleaving — hash-verifies end to end. At "
     "100 TB this is the double-CDC join: per batch cost |delta| + "
     "|touched buckets|, never |view|.",
-    priority=8,
 )
 def join_view_two_stream(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.streaming.sinks import read_stream_stream_join
@@ -5292,7 +5231,6 @@ FROM bfs GROUP BY node
     "DataFrame loop equals the fixpoint semantics SQL engines define "
     "for recursion. Hop-0 = first reach = MIN(hop): set semantics "
     "per level make the result identical under any partitioning.",
-    priority=8,
 )
 def graph_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.graph import bfs_hops
@@ -5369,7 +5307,6 @@ WHERE doc_id BETWEEN 100 AND 299
     "raw documents. At 100 TB: clustered writes + footer stats bound "
     "a range query to O(matching files) with no Spark job spent "
     "deciding.",
-    priority=8,
 )
 def timetravel_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.commitlog import read_pruned
@@ -5392,7 +5329,6 @@ def timetravel_pruned_scan(spark: SparkSession, sf: str) -> DataFrame:
     "agree with the raw recompute AND each other). At 100 TB this is "
     "the difference between an optimization users must know about and "
     "one the table applies for every bounded read.",
-    priority=8,
 )
 def timetravel_pruned_auto(spark: SparkSession, sf: str) -> DataFrame:
     log = _zonemap_log(spark, sf)
@@ -5617,7 +5553,6 @@ WHERE doc_id % 7 <> 0
     "primitive: a writable copy of a production snapshot costs "
     "directory entries, and either side's vacuum only drops its own "
     "links (the inode survives until the last one).",
-    priority=8,
 )
 def timetravel_clone_divergent(spark: SparkSession, sf: str) -> DataFrame:
     clone = _clone_log(spark, sf)
@@ -5654,7 +5589,6 @@ WHERE user_id BETWEEN 0 AND 4
     "skew, and the Z-value is a transient sort key computed in-row "
     "(one approxQuantile pass per column, no join, no stored "
     "column).",
-    priority=8,
 )
 def timetravel_zorder_box(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.commitlog import read_pruned
@@ -5697,7 +5631,6 @@ WHERE md5(text) = (SELECT md5(text) FROM documents WHERE doc_id = 321)
     "digests/ids: O(1 + fpp × files) file opens instead of O(files), "
     "with the probe fully driver-side (pure-Python md5 twin of the "
     "JVM expression — no Spark job to decide the scan).",
-    priority=8,
 )
 def timetravel_bloom_lookup(spark: SparkSession, sf: str) -> DataFrame:
     log = _bloom_log(spark, sf)
@@ -5736,7 +5669,6 @@ FROM documents WHERE doc_id % 4 = 0
     "changed files) — on a time-clustered table one file per commit "
     "— never O(changed files), and the pruning is the SAME "
     "_prune_files core the snapshot read path uses.",
-    priority=8,
 )
 def timetravel_cdf_pruned(spark: SparkSession, sf: str) -> DataFrame:
     log = _cdf_pruned_log(spark, sf)
@@ -5821,7 +5753,6 @@ WHERE doc_id % 7 <> 3 AND doc_id % 11 <> 5
     "row-for-row by test_mor_matches_cow_delete_semantics_exactly "
     "(tests/test_deletion_vectors.py); this face is the same content "
     "through the MOR path.",
-    priority=8,
 )
 def timetravel_dv_delete(spark: SparkSession, sf: str) -> DataFrame:
     log = _dv_log(spark, sf)
@@ -5859,7 +5790,6 @@ WHERE doc_id % 7 = 3 OR (doc_id % 7 <> 3 AND doc_id % 11 = 5)
     "file-diff CDF: the dv relations are O(deleted rows) and the "
     "content reads touch O(files-with-new-entries), never the "
     "snapshot.",
-    priority=8,
 )
 def timetravel_dv_cdf(spark: SparkSession, sf: str) -> DataFrame:
     log = _dv_log(spark, sf)
@@ -5894,7 +5824,6 @@ WHERE doc_id % 7 <> 3 AND doc_id % 11 <> 5
     "images instead of rewriting every touched file, and the keyed "
     "change feed still classifies it as the standard "
     "pre/post-image pair.",
-    priority=8,
 )
 def timetravel_dv_update(spark: SparkSession, sf: str) -> DataFrame:
     log = _dv_log(spark, sf)
@@ -5934,7 +5863,6 @@ WHERE doc_id % 7 <> 3
     "At 100 TB this is the ops-facing face of time travel ('what did "
     "the table look like before last night's job'): O(#retained "
     "manifests) driver-side JSON reads, no Spark job to resolve.",
-    priority=8,
 )
 def timetravel_asof_ts(spark: SparkSession, sf: str) -> DataFrame:
     log = _dv_log(spark, sf)
@@ -5976,7 +5904,6 @@ FROM orders o JOIN customer c ON o.o_custkey = c.c_custkey
     "multi-table time travel ('rebuild the training batch exactly as "
     "the pipeline saw it at 02:00'): resolution is O(#retained "
     "catalog manifests) driver-side JSON reads, no Spark job.",
-    priority=8,
 )
 def catalog_asof_ts(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.catalogtx import CatalogLog

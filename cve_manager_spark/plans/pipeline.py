@@ -9,6 +9,8 @@ deterministic exact paths (`dedup_exact`, `dedup_ngram_jaccard`,
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
@@ -16,18 +18,11 @@ from cve_manager_spark.operators import dedup as D
 from cve_manager_spark.operators import similarity as S
 from cve_manager_spark.functions.helpers import fan_out, values_relation
 from cve_manager_spark.operators import text as T
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = (), priority: int = 0):
-    def deco(fn):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, priority=priority))
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # ---------------------------------------------------------------------------
@@ -657,7 +652,6 @@ SELECT event_type, d, id, value FROM (
     "hash-verified end to end. At 100 TB: one window rank partitioned "
     "on the stratum key — a single hash exchange, never a global "
     "sort; state ≤ k x |strata| rows.",
-    priority=8,
 )
 def sample_bottomk_stratified(spark: SparkSession, sf: str) -> DataFrame:
     from pyspark.sql import Window
@@ -1444,14 +1438,7 @@ def _finalize() -> None:
     }
     for i, spec in enumerate(SPECS):
         if spec.name in lazy:
-            SPECS[i] = QuerySpec(
-                name=spec.name,
-                build=spec.build,
-                oracle=lazy[spec.name],
-                doc=spec.doc,
-                tags=spec.tags,
-                priority=spec.priority,
-            )
+            SPECS[i] = dataclasses.replace(spec, oracle=lazy[spec.name])
 
 
 _finalize()
@@ -1574,7 +1561,6 @@ FROM jm GROUP BY 1
     "(ppm div), reusing the dedup_minhash_det pipeline "
     "(operators/dedup.minhash_det_pairs with_counts=True, which now "
     "also emits sig_matches).",
-    priority=1,
 )
 def minhash_estimate_error(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators import dedup as D
@@ -1657,7 +1643,6 @@ FROM j GROUP BY id_new
     "new doc its old-side candidate and verified-dup counts. At scale "
     "old signatures are precomputed index state; the one tagged scan "
     "here mirrors dedup_incremental's shape.",
-    priority=3,
 )
 def minhash_incremental_dups(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.dedup import word_shingles

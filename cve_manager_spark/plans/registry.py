@@ -7,10 +7,6 @@ uniqueness so a typo can't silently shadow a query.
 
 from __future__ import annotations
 
-import glob
-import json
-import os
-
 from cve_manager_spark.plans.spec import Builder, QuerySpec
 
 
@@ -19,478 +15,6 @@ from cve_manager_spark.plans.spec import Builder, QuerySpec
 # no signal and under-report coverage (numpy/pandas/pyspark.ml are baked into
 # the runtime, so an ImportError here is always a real defect).
 EXPECTED_QUERY_COUNT = 440
-
-# Queries the round-1 driver gate hash-verified (CORRECTNESS_r01.json, all
-# green). The driver samples a PREFIX of the registry, so ordering is a
-# verification-priority queue: oracle-paired queries with no driver verdict
-# yet come first, already-green ones rotate behind them, and rows-only specs
-# (oracle=None — the driver can only count rows) go last. Append each
-# round's newly green names so the next round's window promotes whatever is
-# still unverified.
-DRIVER_GREEN = frozenset({
-    "agg_conditional",
-    "agg_count",
-    "agg_cube",
-    "agg_distinct",
-    "agg_groupby",
-    "agg_grouping_sets",
-    "agg_percentile",
-    "agg_pivot",
-    "agg_rollup",
-    "agg_salted",
-    "agg_stats",
-    "agg_string_concat",
-    "anomaly_zscore",
-    "argmax_per_key",
-    "array_set_ops",
-    "attribution_last_touch",
-    "basket_pairs",
-    "bigram_backoff_surprisal",
-    "bigram_lift",
-    "bigram_surprisal_score",
-    "bloom_fp_audit",
-    "bm25_topk",
-    "boilerplate_ngrams",
-    "boilerplate_segments_topk",
-    "cast_date",
-    "cast_to_string",
-    "catalog_txn_snapshot",
-    "catalog_view_atomic",
-    "cdc_upsert",
-    "char_coverage_curve",
-    "char_window_source_leakage",
-    "char_window_xdoc",
-    "chars_per_word_hist",
-    "chunk_documents",
-    "cms_width_sweep",
-    "cohort_ltv_matrix",
-    "corpus_clean",
-    "corpus_profile",
-    "corpus_quality_dup_matrix",
-    "corr_regress",
-    "corr_surprisal_length",
-    "cosine_threshold",
-    "countmin_estimate_error",
-    "cumulative_unique_users",
-    "customer_balance_band_profile",
-    "customer_order_gap_stats",
-    "customer_order_recency",
-    "customer_repeat_rate",
-    "customer_rfm",
-    "customer_top_decile_concentration",
-    "dau_jaccard_consecutive",
-    "dau_wau_stickiness",
-    "decontam_source_summary",
-    "decontaminate_ngram",
-    "decontaminate_spans",
-    "dedup_cascade_funnel",
-    "dedup_cluster_rep",
-    "dedup_clusters",
-    "dedup_embedding",
-    "dedup_exact",
-    "dedup_image_phash",
-    "dedup_incremental",
-    "dedup_keyed",
-    "dedup_minhash_det",
-    "dedup_modality_agreement",
-    "dedup_ngram_jaccard",
-    "dedup_normalized",
-    "dedup_prefix",
-    "dedup_savings_by_source",
-    "dedup_simhash_det",
-    "dedup_survivorship_bias",
-    "discount_band_revenue",
-    "discount_tax_corr",
-    "distinct_bucket_occupancy",
-    "doc_fingerprint",
-    "doc_len_ttr_corr",
-    "doc_length_histogram",
-    "doc_length_mass_bands",
-    "doc_prefix_collision",
-    "doc_sentence_stats",
-    "dq_checks",
-    "dq_freshness",
-    "dq_quarantine",
-    "drift_escape_report",
-    "dup_bigram_mass_by_source",
-    "dup_cluster_length_stats",
-    "dup_cluster_size_hist",
-    "dup_rate_by_source",
-    "embedding_bucket_histogram",
-    "embedding_centroid",
-    "embedding_component_extremes",
-    "embedding_dim_stats",
-    "embedding_drift_buckets",
-    "embedding_kmeans",
-    "embedding_norm_stats",
-    "embedding_norm_zscore_outliers",
-    "embedding_octant_occupancy",
-    "embedding_pca_power",
-    "embedding_quantize",
-    "embedding_sign_balance",
-    "epoch_shuffle_blocks",
-    "error_rate_hourly",
-    "eval_overlap_score",
-    "event_transitions",
-    "event_type_share",
-    "event_value_deciles_by_type",
-    "events_benford_first_digit",
-    "events_burst_minutes",
-    "events_churn_bands",
-    "events_cusum_extremes",
-    "events_daily_new_vs_returning",
-    "events_daily_top_user_share",
-    "events_debounce",
-    "events_dow_hour_heatmap",
-    "events_fano_daily",
-    "events_funnel",
-    "events_hour_of_week_peak",
-    "events_interarrival_hist",
-    "events_lag1_value_autocorr",
-    "events_lag_gap",
-    "events_markov_2step",
-    "events_peak_hour_ratio",
-    "events_retention",
-    "events_session_gap_sweep",
-    "events_top_user_per_type_day",
-    "events_type_cooccurrence",
-    "events_user_lifespan",
-    "events_weekend_share",
-    "explode_conditional",
-    "explode_nested",
-    "explode_outer_nulls",
-    "fd_profile",
-    "fill_gaps",
-    "filter_conjunction",
-    "filter_date_range",
-    "filter_eq",
-    "filter_eq_int",
-    "filter_like",
-    "filter_or_threshold",
-    "first_week_retention",
-    "fuzzy_pairs_levenshtein",
-    "gopher_quality_flags",
-    "graph_bfs_hops",
-    "graph_degree_assortativity",
-    "graph_degree_hist",
-    "graph_kcore",
-    "graph_neighbor_jaccard",
-    "group_sample_topn",
-    "grouped_median_pandas",
-    "hard_negative_mining",
-    "hash_sample_quantile_error",
-    "heavy_hitters",
-    "histogram_fixed",
-    "hits_hubs_authorities",
-    "image_dup_cluster_sizes",
-    "image_phash",
-    "image_phash_bit_balance",
-    "image_phash_prevalence",
-    "interarrival_hazard",
-    "inverted_index",
-    "iqr_outliers",
-    "ivf_assignments",
-    "ivf_delta_assignments",
-    "ivf_list_balance",
-    "ivm_rollup_delta",
-    "join_anti",
-    "join_asof",
-    "join_cardinality_audit",
-    "join_full_reconcile",
-    "join_inner_view",
-    "join_interval",
-    "join_left_lookup",
-    "join_null_safe",
-    "join_range_pred",
-    "join_salted",
-    "join_semi",
-    "join_star_detail",
-    "join_view_two_stream",
-    "json_extract",
-    "json_schema_infer",
-    "k_anonymity_audit",
-    "kmv_set_ops_error",
-    "knn_cosine",
-    "knn_cosine_pandas",
-    "knn_join_multi",
-    "knn_loo_accuracy",
-    "knn_per_label",
-    "l_diversity_audit",
-    "label_centroid_cosine",
-    "label_collapse_rare",
-    "label_pair_centroid_dist",
-    "lang_confusion_audit",
-    "lang_source_gini",
-    "langid_confusion",
-    "late_data_audit",
-    "length_ks_by_source",
-    "limit_1",
-    "lines_per_order_hist",
-    "logbucket_quantile_error",
-    "longest_doc_per_lang",
-    "longest_streak",
-    "markov_conditional_entropy",
-    "max_concurrency",
-    "max_trigram_repeat",
-    "median_exact",
-    "minhash_band_fp_rate",
-    "minhash_band_stats",
-    "minhash_estimate_error",
-    "minhash_incremental_dups",
-    "mix_budget",
-    "mix_temperature",
-    "monthly_revenue_momentum",
-    "multimodal_audio_energy",
-    "multimodal_features",
-    "multimodal_frames",
-    "multimodal_thumbnail",
-    "nation_actor_presence",
-    "nation_balance_sheet",
-    "nation_supplier_customer_ratio",
-    "nation_top3_customers",
-    "nation_trade_balance",
-    "nation_yearly_rank_shift",
-    "near_dup_source_matrix",
-    "nearest_event",
-    "null_fallback",
-    "order_size_histogram",
-    "order_value_band_matrix",
-    "order_value_gini_by_segment",
-    "orders_backlog_aging",
-    "orders_monthly_seasonality",
-    "orders_monthly_yoy",
-    "orders_pareto",
-    "orders_quarterly_priority_trend",
-    "orders_status_priority_matrix",
-    "pack_sequences",
-    "packing_utilization",
-    "pagerank_links",
-    "part_brand_size_stats",
-    "part_min_price_per_type",
-    "part_name_token_freq",
-    "part_price_spread",
-    "part_supplier_degree_hist",
-    "part_type_price_iqr",
-    "part_type_share",
-    "pca_projection_by_label",
-    "pca_residual_norms",
-    "pca_topr_residual_norms",
-    "perplexity_filter_rate",
-    "phash_hamming_hist",
-    "pii_density_by_source",
-    "posexplode_index",
-    "pq_code_balance",
-    "pq_codes",
-    "pq_reconstruction_error",
-    "pq_subspace_balance",
-    "prefix_bucket_sizes",
-    "prefix_source_flow",
-    "price_band_discount_profile",
-    "project_cols",
-    "project_nested",
-    "purchase_conversion_lag",
-    "quality_by_source_profile",
-    "quality_classifier_score",
-    "quality_flag_cooccurrence",
-    "quality_importance_sample",
-    "quality_length_calibration",
-    "quality_score_deciles",
-    "quality_threshold_sweep",
-    "quantile_exact",
-    "quantity_mode_by_flag",
-    "quasi_id_uniqueness",
-    "regexp_extract_numbers",
-    "retention_cohort",
-    "returned_share_by_brand",
-    "rolling_7d_median_events",
-    "rolling_active_users",
-    "rollup_cascade",
-    "sample_bottomk_stratified",
-    "sample_hash",
-    "sample_size_quantile_sweep",
-    "scd2_asof_lookup",
-    "scd2_asof_tolerance",
-    "scd2_intervals",
-    "seasonal_decompose_dow",
-    "seasonal_naive_backtest",
-    "segment_dedup_savings",
-    "segment_priority_mix",
-    "segment_value_profile",
-    "semantic_cell_drift",
-    "semantic_decontamination",
-    "semantic_dedup",
-    "semantic_dedup_frozen_keep",
-    "semantic_dedup_incremental",
-    "semantic_dedup_keep",
-    "session_duration_hist",
-    "sessionize_stats",
-    "set_except",
-    "set_ops",
-    "shard_balance_audit",
-    "shingle_containment",
-    "shingle_novelty",
-    "shingle_size_sweep",
-    "ship_delay_quartiles",
-    "shipping_delay_stats",
-    "slow_fulfillment_share",
-    "snapshot_diff",
-    "sort_topk",
-    "source_lang_matrix",
-    "source_ngram_novelty",
-    "source_unigram_kl",
-    "source_vocab_overlap",
-    "split_assign_3way",
-    "split_drift_topwords",
-    "split_dup_leakage",
-    "split_psi",
-    "sql_tpch_q1",
-    "sql_tpch_q10",
-    "sql_tpch_q11",
-    "sql_tpch_q12lite",
-    "sql_tpch_q13",
-    "sql_tpch_q14",
-    "sql_tpch_q15",
-    "sql_tpch_q16",
-    "sql_tpch_q17",
-    "sql_tpch_q18",
-    "sql_tpch_q19",
-    "sql_tpch_q2",
-    "sql_tpch_q20",
-    "sql_tpch_q21",
-    "sql_tpch_q22",
-    "sql_tpch_q3",
-    "sql_tpch_q4",
-    "sql_tpch_q5",
-    "sql_tpch_q6",
-    "sql_tpch_q7",
-    "sql_tpch_q8",
-    "sql_tpch_q9",
-    "stop_shingle_report",
-    "stopword_profile",
-    "stopword_surprisal_split",
-    "str_concat_fold",
-    "str_isdigit",
-    "str_replace",
-    "str_strip_prefix",
-    "stratified_sample",
-    "supplier_balance_decile",
-    "supplier_balance_health",
-    "supplier_coverage",
-    "supplier_hhi_by_nation",
-    "supplier_nation_balance_share",
-    "surprisal_contamination_interaction",
-    "surprisal_quality_matrix",
-    "t_closeness_audit",
-    "table_profile",
-    "text_char_class_profile",
-    "text_digit_density",
-    "text_hapax_rate",
-    "text_lang_id",
-    "text_ngram_freq",
-    "text_pii_mask",
-    "text_punct_density",
-    "text_quality",
-    "text_repetition_ratio",
-    "text_simpson_diversity",
-    "text_tfidf",
-    "text_tokenize_count",
-    "text_top_terms",
-    "text_ttr_by_source",
-    "text_word_len_profile",
-    "timetravel_changes",
-    "timetravel_evolution_cdf",
-    "timetravel_partition_evolution",
-    "timetravel_pruned_auto",
-    "timetravel_pruned_scan",
-    "timetravel_snapshot_diff",
-    "timetravel_version_counts",
-    "token_budget_by_source",
-    "token_count",
-    "token_gini_by_source",
-    "token_len_histogram",
-    "tokenizer_fertility",
-    "tokens_per_kchar_bands",
-    "top_customer_by_priority",
-    "top_ngram_per_lang",
-    "top_word_mass_bands",
-    "triangle_count",
-    "trigram_novelty_by_source",
-    "unigram_entropy_by_lang",
-    "unigram_surprisal_bands",
-    "union_all",
-    "unpivot_melt",
-    "user_event_entropy",
-    "user_inter_event_cv",
-    "user_profile",
-    "user_type_gini",
-    "value_mad",
-    "vocab_coverage",
-    "vocab_growth_curve",
-    "weekly_order_growth",
-    "weighted_median",
-    "window_cume_dist",
-    "window_first_last",
-    "window_ntile",
-    "window_percent_rank",
-    "window_range_frame",
-    "window_rank",
-    "window_running",
-    "window_session",
-    "window_sliding",
-    "window_tumbling",
-    "winsorize_stats",
-    "wma_trailing",
-    "word_df_zipf_buckets",
-    "word_len_hist",
-    "word_position_profile",
-    "zipf_band_slope_by_source",
-})
-
-
-def driver_green() -> frozenset[str]:
-    """DRIVER_GREEN plus every hash-green name found in the repo's
-    CORRECTNESS_r*.json reports at call time.
-
-    The static set is the committed provenance; reading the reports live
-    removes the round-boundary failure mode where the driver re-verifies
-    an already-green window because the fold-in script didn't run between
-    rounds (this cost round 3 its entire verification budget). Repo root
-    is resolved relative to this file; unreadable reports are skipped."""
-    names = set(DRIVER_GREEN)
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        for name, r in rows.items():
-            if isinstance(r, dict) and r.get("hash_match") is True:
-                names.add(name)
-    return frozenset(names)
-
-
-def driver_seen() -> frozenset[str]:
-    """Every query name that has EVER appeared in a driver CORRECTNESS
-    window (any verdict — green, rows-only, or error). Rows-only specs
-    can never go hash-green, so :func:`driver_green` can't retire them
-    from the sampling queue; this set can. VERDICT r10 #2: ten
-    registered rows-only specs had never been sampled at all because
-    they always sorted behind the entire green rotation."""
-    names: set[str] = set()
-    repo = os.path.dirname(
-        os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    )
-    for path in sorted(glob.glob(os.path.join(repo, "CORRECTNESS_r*.json"))):
-        try:
-            with open(path) as f:
-                rows = json.load(f)
-        except (OSError, ValueError):
-            continue
-        names.update(k for k, r in rows.items() if isinstance(r, dict))
-    return frozenset(names)
 
 
 def _all_specs() -> list[QuerySpec]:
@@ -521,40 +45,20 @@ def _all_specs() -> list[QuerySpec]:
                 raise ValueError(f"duplicate query name: {spec.name}")
             by_name[spec.name] = spec
 
-    # The pre-sort input order is the EXPLICIT list in plans/order.py, not
-    # module concatenation: specs can move between modules without
-    # reshuffling the driver's sampling prefix, and a spec registered but
-    # not listed (or listed but lost) is a hard error in either direction.
+    # The order is the EXPLICIT list in plans/order.py, not module
+    # concatenation: specs can move between modules without reshuffling a
+    # prefix sampled from queries(), and a spec registered but not listed
+    # (or listed but lost) is a hard error in either direction.
     unlisted = sorted(set(by_name) - set(BASE_ORDER))
     lost = sorted(set(BASE_ORDER) - set(by_name))
     if unlisted or lost:
         raise RuntimeError(
             "registry/order mismatch: "
             f"registered-but-unlisted={unlisted or 'none'}, "
-            f"listed-but-missing={lost or 'none'} — append new spec names "
+            f"listed-but-missing={lost or 'none'} — add new spec names "
             "to plans/order.py BASE_ORDER when registering them"
         )
-    in_base_order = [by_name[name] for name in BASE_ORDER]
-
-    green = driver_green()
-    seen = driver_seen()
-
-    def key(spec: QuerySpec) -> tuple[int, int]:
-        # Verification-priority tiers for the driver's 50-slot prefix:
-        #   0 oracle-paired, no green verdict yet (hash check pending)
-        #   1 rows-only, never sampled (a rows/err verdict is pending —
-        #     VERDICT r10 #2: these starved forever behind the rotation)
-        #   2 oracle-paired green (pure rotation)
-        #   3 rows-only already sampled (another slot adds nothing)
-        if spec.oracle is None:
-            tier = 3 if spec.name in seen else 1
-        else:
-            tier = 2 if spec.name in green else 0
-        # priority queues later-added specs behind older ones still waiting
-        # for their first driver verdict (spec.py QuerySpec.priority)
-        return (tier, spec.priority)
-
-    specs = sorted(in_base_order, key=key)  # stable: BASE_ORDER within key
+    specs = [by_name[name] for name in BASE_ORDER]
     if len(specs) != EXPECTED_QUERY_COUNT:
         raise RuntimeError(
             f"registry expected {EXPECTED_QUERY_COUNT} queries, found {len(specs)} — "

@@ -23,18 +23,11 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from cve_manager_spark.functions.helpers import dec, dec_sum, fan_out, is_digits, strip_charset_prefix
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = (), priority: int = 0):
-    def deco(fn):
-        SPECS.append(QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags, priority=priority))
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # ---------------------------------------------------------------------------
@@ -871,7 +864,6 @@ FROM supplier s JOIN nation n ON s.s_nationkey = n.n_nationkey
     "across engines — no rounding recipe needed; rank rides along as "
     "the tie witness. One nation-partitioned window sort over a "
     "broadcast-joined 25-row nation dim.",
-    priority=1,
 )
 def window_cume_dist(spark: SparkSession, sf: str) -> DataFrame:
     su = load_table(spark, sf, "supplier")

@@ -28,6 +28,8 @@ splitting handles (same hatch as operators/skew.py documents).
 
 from __future__ import annotations
 
+import dataclasses
+
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
@@ -39,27 +41,11 @@ from cve_manager_spark.functions.helpers import (
     long_array_lit,
     long_matrix_lit,
 )
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(name, oracle, doc="", tags=(), priority: int = 0):
-    def deco(fn):
-        SPECS.append(
-            QuerySpec(
-                name=name,
-                build=fn,
-                oracle=oracle,
-                doc=doc or (fn.__doc__ or ""),
-                tags=tags,
-                priority=priority,
-            )
-        )
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # Shared oracle prefix: quantize → seed on the 8 lowest vec_ids → two
@@ -479,7 +465,6 @@ SELECT CAST(pos - 1 AS INTEGER) AS dim, v AS loading FROM v2
     "pass with d map-side-combinable sums, d+1 scalars to the driver "
     "(the kmeans_quantized contract); no join, no shuffle beyond the "
     "global-aggregate exchange.",
-    priority=1,
 )
 def embedding_pca_power(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import pca_power_top
@@ -514,7 +499,6 @@ GROUP BY e2.label
     "Projections are the same exact-integer y pipeline as the power "
     "iteration (floor(dot/1e6)); one extra corpus pass + a label "
     "aggregate.",
-    priority=1,
 )
 def pca_projection_by_label(spark: SparkSession, sf: str) -> DataFrame:
     import math
@@ -623,7 +607,6 @@ FROM g, st
     "stats broadcast, and a 16-key partial-agg'd groupBy — no shuffle "
     "carries vector payloads, and the monitor's per-window state is 16 "
     "integers regardless of corpus size.",
-    priority=7,
 )
 def embedding_drift_buckets(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import (
@@ -815,7 +798,6 @@ def _incr_assignments(spark: SparkSession, sf: str):
     "match — the nightly-ingest dedup gate at 100 TB: one frozen-"
     "meta encode pass + one cell-bucketed join, never all-pairs, "
     "never a retrain.",
-    priority=2,
 )
 def semantic_dedup_incremental(spark: SparkSession, sf: str) -> DataFrame:
     ab, ad, _ = _incr_assignments(spark, sf)
@@ -896,7 +878,6 @@ LEFT JOIN (SELECT cid, COUNT(*) AS n FROM ad GROUP BY cid) d ON c2.cid = d.cid
     "upsert-between-rebuilds trade relies on. Two cell-keyed "
     "aggregates over assignments already computed map-side; the "
     "k-row spine comes from the centroid list itself.",
-    priority=2,
 )
 def semantic_cell_drift(spark: SparkSession, sf: str) -> DataFrame:
     ab, ad, k = _incr_assignments(spark, sf)
@@ -971,7 +952,6 @@ GROUP BY e2.label
     "emitted via one final double cast (the dec_sum convention — both "
     "engines correctly round the same exact decimal). One extra "
     "corpus pass over the power-iteration pipeline.",
-    priority=2,
 )
 def pca_residual_norms(spark: SparkSession, sf: str) -> DataFrame:
     import math
@@ -1085,7 +1065,6 @@ FROM mem LEFT JOIN drc ON mem.cid = drc.cid
     "everything), the codebook here never sees the delta — the "
     "no-retrain nightly-ingest contract. Cell-keyed equi self-join "
     "(never all-pairs), exact-integer cosine in DECIMAL(38,0).",
-    priority=7,
 )
 def semantic_dedup_frozen_keep(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import dup_dominated
@@ -1153,7 +1132,6 @@ FROM pr, rb WHERE pr.win = 1 GROUP BY rb.n_ref
     "this report quantifies what the clamp absorbed. One projection "
     "pass, a 1-row reference-bounds broadcast, one conditional "
     "aggregate — per-window state is 4 integers.",
-    priority=7,
 )
 def drift_escape_report(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import (
@@ -1254,7 +1232,6 @@ FROM nv JOIN bl ON nv.subspace = bl.subspace
     "with d-key partial aggregates (energy in DECIMAL(38,0) via "
     "HUGEINT-exact products), a d-row ranking window, two 4-key "
     "roll-ups — no vector-sized shuffle.",
-    priority=7,
 )
 def pq_subspace_balance(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import quantize_vec
@@ -1805,14 +1782,7 @@ def _finalize_lazy_oracles() -> None:
     }
     for i, spec in enumerate(SPECS):
         if spec.name in lazy:
-            SPECS[i] = QuerySpec(
-                name=spec.name,
-                build=spec.build,
-                oracle=lazy[spec.name],
-                doc=spec.doc,
-                tags=spec.tags,
-                priority=spec.priority,
-            )
+            SPECS[i] = dataclasses.replace(spec, oracle=lazy[spec.name])
 
 
 _finalize_lazy_oracles()
@@ -1936,7 +1906,6 @@ FROM ad
     "(centroid literals; no join, no shuffle, no retrain) — the 100 TB "
     "nightly-refresh shape where index growth costs one narrow encode "
     "pass plus a sliver-merge.",
-    priority=1,
 )
 def ivf_delta_assignments(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import kmeans_fit
@@ -2025,7 +1994,6 @@ FROM te LEFT JOIN ag ON te.vec_id = ag.vec_id
     "cross-multiplication from semantic_dedup (dot^2 * 400 >= na*nb*49 "
     "in DECIMAL(38)); zero-neighbor test docs are kept via left join "
     "so the report is the full test manifest.",
-    priority=1,
 )
 def semantic_decontamination(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import kmeans_quantized
@@ -2136,7 +2104,6 @@ FROM nn GROUP BY la
     "candidate shape — at 100 TB this IS the eval you can afford; "
     "cross-cell misses are the known recall trade measured by the ANN "
     "audits).",
-    priority=1,
 )
 def knn_loo_accuracy(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import kmeans_quantized
@@ -2237,7 +2204,6 @@ SELECT vec_id, neg_id, dot_q FROM rk WHERE rn = 1
     "(dot desc, id) tie-break, so the mined pairs hash-verify. Vecs "
     "whose cell holds no other label are absent (no negative to "
     "mine).",
-    priority=3,
 )
 def hard_negative_mining(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import kmeans_quantized
@@ -2327,7 +2293,6 @@ def _pq_recon_oracle(m: int = 4, w: int = 16, k: int = 8) -> str:
     "the broadcast codebook literals (sum of (a-b)^2 == the "
     "|q|^2-2qc+|c|^2 the oracle recomputes); one narrow pass, one "
     "m-row aggregate.",
-    priority=3,
 )
 def pq_reconstruction_error(spark: SparkSession, sf: str) -> DataFrame:
     from cve_manager_spark.operators.semantic import quantize_vec

@@ -22,33 +22,11 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from cve_manager_spark.plans.spec import QuerySpec
+from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
 SPECS: list[QuerySpec] = []
-
-
-def _register(
-    name: str,
-    oracle: str | None,
-    doc: str = "",
-    tags: tuple[str, ...] = (),
-    priority: int = 4,
-):
-    def deco(fn):
-        SPECS.append(
-            QuerySpec(
-                name=name,
-                build=fn,
-                oracle=oracle,
-                doc=doc or (fn.__doc__ or ""),
-                tags=tags,
-                priority=priority,
-            )
-        )
-        return fn
-
-    return deco
+_register = registrar(SPECS)
 
 
 # hex digit value of position p (1-based) of md5(s) — the shared uniform

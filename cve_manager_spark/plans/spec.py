@@ -31,12 +31,23 @@ class QuerySpec:
     oracle: str | None  # ANSI SQL for DuckDB; None → rows-only check
     doc: str = ""
     tags: tuple[str, ...] = field(default=())
-    # Verification-queue priority: the driver hash-checks only a 50-entry
-    # prefix of the registry. Specs added while older ones still await
-    # their first driver verdict may carry a higher number to queue
-    # BEHIND them (registry sorts by (tier, priority), stable on module
-    # order); locally they are oracle-checked either way. The round-7
-    # reset collapsed every priority back to 0 — tier + module order
-    # alone now drives the queue; bump only if a new tranche must yield
-    # to an older unverified one that module order would not protect.
-    priority: int = 0
+
+
+def registrar(specs: list[QuerySpec]) -> Callable[..., Callable[[Builder], Builder]]:
+    """The ``@_register(name, oracle, doc=..., tags=...)`` decorator of a plans
+    module: appends one QuerySpec per decorated builder to ``specs`` (the
+    module's SPECS list) and returns the builder unchanged. ``doc`` defaults
+    to the builder's docstring."""
+
+    def register(
+        name: str, oracle: str | None, doc: str = "", tags: tuple[str, ...] = ()
+    ) -> Callable[[Builder], Builder]:
+        def deco(fn: Builder) -> Builder:
+            specs.append(
+                QuerySpec(name=name, build=fn, oracle=oracle, doc=doc or (fn.__doc__ or ""), tags=tags)
+            )
+            return fn
+
+        return deco
+
+    return register

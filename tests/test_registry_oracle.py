@@ -54,32 +54,19 @@ def test_registry_consistency():
 
 
 def test_registry_complete_and_ordered():
-    """Guards VERDICT r1 findings: (a) no silent family drop — the exact
-    query count is asserted; (b) the driver's correctness gate samples a
-    50-entry prefix of the registry, so the registry is a verification-
-    priority queue: every oracle-paired query WITHOUT a green driver row
-    yet must land inside that window, ahead of already-verified and
-    rows-only specs."""
+    """The registry order is exactly plans/order.py's BASE_ORDER: no family
+    is silently dropped (the exact query count), no sort reorders the list
+    whose 50-entry prefix is sampled for hash checks, and every
+    oracle-paired spec precedes the rows-only tail."""
     from cve_manager_spark.plans import registry
+    from cve_manager_spark.plans.order import BASE_ORDER
 
     specs = registry._all_specs()
     assert len(specs) == registry.EXPECTED_QUERY_COUNT
-    # The ordering folds in CORRECTNESS_r*.json at call time (driver_green()),
-    # so the guard must use the same dynamic set — checking against the static
-    # DRIVER_GREEN constant goes stale the moment the driver drops a new
-    # report (VERDICT r4 finding #1).
-    green = registry.driver_green()
-    unverified = [
-        s for s in specs if s.oracle is not None and s.name not in green
-    ]
-    # the window is all-unverified (no green or rows-only spec wastes a slot)
-    head = specs[: min(50, len(unverified))]
-    assert all(s.oracle is not None and s.name not in green for s in head)
-    # when the backlog exceeds the window, only higher-priority (later-added)
-    # specs may overflow it — every priority-0 unverified query is inside
-    window = {s.name for s in specs[:50]}
-    missing = [s.name for s in unverified if s.priority == 0 and s.name not in window]
-    assert not missing, f"priority-0 unverified queries outside driver window: {missing}"
+    assert tuple(s.name for s in specs) == BASE_ORDER
+    first_rows_only = next((i for i, s in enumerate(specs) if s.oracle is None), len(specs))
+    late = [s.name for s in specs[first_rows_only:] if s.oracle is not None]
+    assert not late, f"oracle-paired specs after the rows-only tail: {late}"
 
 
 # spark dtype → acceptable DuckDB type names; the driver's gate records a
