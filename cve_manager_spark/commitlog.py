@@ -45,13 +45,14 @@ directory without the log.
 from __future__ import annotations
 
 import json
+import logging
 import os
 import shutil
 import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
@@ -64,6 +65,8 @@ from cve_manager_spark.maintenance import (
 
 _LOG_DIR = "_commits"
 _DV_DIR = "_deletes"
+
+_log = logging.getLogger(__name__)
 
 # sentinel for _publish: "carry the parent manifest's deletion-vector
 # block forward unchanged" — the fail-safe default, so a publish path
@@ -604,12 +607,11 @@ class TableLog:
         ``(__dv_file string, __dv_pos long)`` — Iceberg v2's position
         delete file shape (file path + row ordinal), with the path
         stored RELATIVE to the table root so clones, branches, and
-        moved tables keep their vectors valid."""
-        return spark.read.parquet(
+        moved tables keep their vectors valid. Every delete file has
+        this shape, so the scan declares it instead of running a
+        schema-inference job."""
+        return spark.read.schema("__dv_file string, __dv_pos long").parquet(
             *(str(self.root / r) for r in dv_files)
-        ).select(
-            F.col("__dv_file").cast("string").alias("__dv_file"),
-            F.col("__dv_pos").cast("long").alias("__dv_pos"),
         )
 
     def _lineage_cols(self):
@@ -829,7 +831,8 @@ class TableLog:
                     zm.stats_for(new_rel, cols)
                 zm.rows_for(new_rel)  # exact counts, same sidecar
         except Exception:
-            pass
+            _log.warning("%s: zone-map sidecar skipped for %d staged "
+                         "files", self.root, len(new_rel), exc_info=True)
         # bloom sidecars, same write-time discipline (see _BloomIndex):
         # only for enabled columns of bloom-safe type present in this
         # write and not hive-encoded into the path
@@ -843,7 +846,8 @@ class TableLog:
             if bcols and new_rel:
                 bl.build_for(out.sparkSession, new_rel, bcols)
         except Exception:
-            pass
+            _log.warning("%s: bloom sidecar skipped for %d staged files",
+                         self.root, len(new_rel), exc_info=True)
         return new_rel
 
     def _abort(self, new_rel: list[str]) -> None:
@@ -858,7 +862,14 @@ class TableLog:
         reclaimed by vacuum if the commit never lands. File count
         scales with the DELETE size, never the table (one file per few
         million positions); no stats/bloom sidecars — DV files are
-        protocol metadata, never data-scan candidates."""
+        protocol metadata, never data-scan candidates.
+
+        ``n_rows`` only sets the file count. A merge passes its update
+        count rather than counting its matches first (on a keyed table
+        each update matches at most one live row). ``delete_where_mor``
+        keeps its pre-count: nothing job-free estimates a predicate's
+        matches, and the table's ``row_count`` would split a small
+        delete on a large table into up to 32 files."""
         tmp = self.root.with_name(
             self.root.name + f".dv-tmp-{uuid.uuid4().hex[:8]}"
         )
@@ -965,7 +976,7 @@ class TableLog:
         out_cols = list(df.columns) + added
         self._enforce_constraints(rows, version, "append")
         new_rel = self._stage(rows.select(*out_cols), "app", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_rows:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1037,7 +1048,7 @@ class TableLog:
         n_rows = rows.count()
         self._enforce_constraints(rows, version, "overwrite")
         new_rel = self._stage(rows, "ovw", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_rows:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1150,7 +1161,7 @@ class TableLog:
         n_affected = affected.count()
         survivors = affected.where(~pred.eqNullSafe(F.lit(True)))
         new_rel = self._stage(survivors, "del", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_affected - n_deleted:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1218,7 +1229,7 @@ class TableLog:
         if n_deleted == 0:
             return {"n_deleted": 0, "files_touched": 0, "version": version}
         new_dv_rel = self._stage_dv(hits, n_deleted)
-        n_staged = _count_files(spark, self.root, new_dv_rel)
+        n_staged = _count_files(self.root, new_dv_rel)
         if n_staged != n_deleted:
             self._abort(new_dv_rel)
             raise RuntimeError(
@@ -1229,11 +1240,9 @@ class TableLog:
         # the manifest's counts map exact without re-running the scan
         per_file = {
             r["__dv_file"]: r["n"]
-            for r in spark.read.parquet(
-                *(str(self.root / r) for r in new_dv_rel)
-            ).groupBy("__dv_file").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
+            for r in self._dv_df(spark, new_dv_rel).groupBy(
+                "__dv_file"
+            ).agg(F.count(F.lit(1)).alias("n")).collect()
         }
         counts = dict(dv.get("counts", {}))
         for k, n in per_file.items():
@@ -1339,8 +1348,8 @@ class TableLog:
             self._abort(new_dv_rel)
             raise
         new_rel = self._stage(images, "upd", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
-        n_dv = _count_files(spark, self.root, new_dv_rel)
+        n_new = _count_files(self.root, new_rel)
+        n_dv = _count_files(self.root, new_dv_rel)
         if n_new != n_matched or n_dv != n_matched:
             self._abort(new_rel)
             self._abort(new_dv_rel)
@@ -1351,11 +1360,9 @@ class TableLog:
             )
         per_file = {
             r["__dv_file"]: r["n"]
-            for r in spark.read.parquet(
-                *(str(self.root / r) for r in new_dv_rel)
-            ).groupBy("__dv_file").agg(
-                F.count(F.lit(1)).alias("n")
-            ).collect()
+            for r in self._dv_df(spark, new_dv_rel).groupBy(
+                "__dv_file"
+            ).agg(F.count(F.lit(1)).alias("n")).collect()
         }
         counts = dict(dv.get("counts", {}))
         for k, n in per_file.items():
@@ -1418,12 +1425,10 @@ class TableLog:
                 f"{type_clash} — a silent widen would fork the table "
                 "schema across rewritten files"
             )
-        n_updates = updates.count()
+        n_updates = _unique_key_rows(updates, key_cols, "merge_upsert_mor")
         if n_updates == 0:
             return {"n_matched": 0, "n_inserted": 0, "version": version}
-        keys = updates.select(*key_cols).distinct()
-        if keys.count() != n_updates:
-            raise ValueError("merge_upsert_mor: duplicate keys in updates")
+        keys = updates.select(*key_cols)
         self._enforce_constraints(updates, version, "merge")
         if not files:
             out = updates.select(*df.columns)
@@ -1440,16 +1445,24 @@ class TableLog:
             return {"n_matched": 0, "n_inserted": n_updates, "version": v}
         dfl = self._read_files(spark, files, schema, dv=dv or None,
                                lineage=True)
-        matched = dfl.join(F.broadcast(keys), key_cols, "left_semi")
-        n_matched = matched.count()
-        hits = matched.select(
+        # the match count rides on the one scan that writes the
+        # positions (an Observation adds no job); the update count
+        # sizes that write
+        seen = Observation()
+        hits = dfl.join(F.broadcast(keys), key_cols, "left_semi").select(
             F.col("__file").alias("__dv_file"),
             F.col("__pos").alias("__dv_pos"),
-        )
-        new_dv_rel = self._stage_dv(hits, n_matched) if n_matched else []
+        ).observe(seen, F.count(F.lit(1)).alias("n"))
+        new_dv_rel = self._stage_dv(hits, n_updates)
+        n_matched = seen.get["n"]
+        n_dv = _count_files(self.root, new_dv_rel)
+        if n_matched == 0:
+            # nothing matched: drop the empty position file so the
+            # manifest's dv block is carried over untouched
+            self._abort(new_dv_rel)
+            new_dv_rel = []
         new_rel = self._stage(updates.select(*df.columns), "mrg", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
-        n_dv = _count_files(spark, self.root, new_dv_rel) if new_dv_rel else 0
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_updates or n_dv != n_matched:
             self._abort(new_rel)
             self._abort(new_dv_rel)
@@ -1462,11 +1475,9 @@ class TableLog:
         if new_dv_rel:
             per_file = {
                 r["__dv_file"]: r["n"]
-                for r in spark.read.parquet(
-                    *(str(self.root / r) for r in new_dv_rel)
-                ).groupBy("__dv_file").agg(
-                    F.count(F.lit(1)).alias("n")
-                ).collect()
+                for r in self._dv_df(spark, new_dv_rel).groupBy(
+                    "__dv_file"
+                ).agg(F.count(F.lit(1)).alias("n")).collect()
             }
             for k, n in per_file.items():
                 counts[k] = counts.get(k, 0) + n
@@ -1563,7 +1574,7 @@ class TableLog:
         )
         n_live = sum(dv["counts"].values())
         new_rel = self._stage_dv(entries, n_live)
-        n_staged = _count_files(spark, self.root, new_rel)
+        n_staged = _count_files(self.root, new_rel)
         if n_staged != n_live:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1627,13 +1638,11 @@ class TableLog:
                 f"{type_clash} — a silent widen would fork the table "
                 "schema across rewritten files"
             )
-        n_updates = updates.count()
+        n_updates = _unique_key_rows(updates, key_cols, "merge_upsert")
         if n_updates == 0:
             return {"n_matched": 0, "n_inserted": 0, "files_touched": 0,
                     "version": version}
-        keys = updates.select(*key_cols).distinct()
-        if keys.count() != n_updates:
-            raise ValueError("merge_upsert: duplicate keys in updates")
+        keys = updates.select(*key_cols)
         self._enforce_constraints(updates, version, "merge")
         if dv:
             # DV-applied lineage read: a merge-on-read-deleted row
@@ -1674,7 +1683,7 @@ class TableLog:
             n_affected = 0
             out = updates.select(*df.columns)
         new_rel = self._stage(out, "mrg", pcols)
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_affected - n_matched + n_updates:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1724,7 +1733,7 @@ class TableLog:
             out = (df.repartition(n_files, *pcols) if pcols
                    else df.repartition(n_files))
         new_rel = self._stage(out, "cmp", pcols, max_records=target_rows_per_file)
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_rows:
             self._abort(new_rel)
             raise RuntimeError(
@@ -1952,7 +1961,7 @@ class TableLog:
         new_rel = self._stage(
             out, "zord", pcols, max_records=target_rows_per_file
         )
-        n_new = _count_files(spark, self.root, new_rel)
+        n_new = _count_files(self.root, new_rel)
         if n_new != n_rows:
             self._abort(new_rel)
             raise RuntimeError(
@@ -2445,12 +2454,31 @@ def _partition_cols_logged(root: Path) -> list[str]:
     return _partition_cols(root, "commitlog")
 
 
-def _count_files(spark: SparkSession, root: Path, rel: list[str]) -> int:
-    if not rel:
-        return 0
-    return spark.read.option("basePath", str(root)).parquet(
-        *(str(root / r) for r in rel)
-    ).count()
+def _unique_key_rows(updates: DataFrame, key_cols: list[str],
+                     op: str) -> int:
+    """Row count of ``updates``, after refusing duplicate keys — one
+    aggregate over the per-key counts. ``groupBy`` puts NULL keys in
+    one group, as ``distinct()`` does, so two NULL keys are
+    duplicates."""
+    per_key = updates.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
+    n_rows, widest = per_key.agg(F.sum("n"), F.max("n")).first()
+    if (widest or 0) > 1:
+        raise ValueError(f"{op}: duplicate keys in updates")
+    return n_rows or 0
+
+
+def _count_files(root: Path, rel: list[str]) -> int:
+    """Rows in the staged files ``rel``, summed from their parquet
+    footers: the same number a ``count()`` over them returns, read
+    without a Spark job. A staged file that has vanished holds no rows,
+    so it shows up as a row mismatch at the caller, which aborts."""
+    n = 0
+    for r in rel:
+        try:
+            n += _footer_nrows(root / r)
+        except FileNotFoundError:
+            pass
+    return n
 
 
 def _footer_minmax(path: Path, columns: list[str]) -> dict:
