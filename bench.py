@@ -3,11 +3,12 @@
 ``local[$SPARK_GRAFT_CPUS]`` and prints ONE JSON line:
 
     {"metric": "...", "value": <total sec>, "unit": "sec", "sf": <sf>,
-     "n_queries": N, "queries": {"_detail": "BENCH_LOCAL.json"}}
+     "n_queries": N, "queries": {"_detail": "BENCH_LOCAL_c<cpus>.json"}}
 
 The driver tail-captures only 2000 chars of stdout, so the stdout line
 carries scalars only; the full per-query map / spreads / trials /
-shuffle bytes are written to BENCH_LOCAL.json next to this file.
+shuffle bytes are written to BENCH_LOCAL_c<cpus>.json next to this
+file, one file per core count, so runs at two widths keep both.
 
 Each query is forced to full materialization with the noop sink (count()
 would let Catalyst prune the very work being measured). Spark logs go to
@@ -368,7 +369,8 @@ def main() -> None:
         "n_passes": n_passes,
         "sf": sf,
     }
-    out = os.path.join(os.path.dirname(os.path.abspath(__file__)), "BENCH_LOCAL.json")
+    detail_name = f"BENCH_LOCAL_c{cpus}.json"
+    out = os.path.join(os.path.dirname(os.path.abspath(__file__)), detail_name)
     try:
         with open(out, "w") as f:
             json.dump(detail, f, indent=1)
@@ -379,8 +381,8 @@ def main() -> None:
     # stdout, and the per-query map (82 queries and growing) outgrew it —
     # BENCH_r10.json came back "parsed": null. The stdout line now carries
     # only the scalars (always < 200 chars regardless of registry growth);
-    # the per-query map, spreads, trials and shuffle bytes live in
-    # BENCH_LOCAL.json, written above.
+    # the per-query map, spreads, trials and shuffle bytes live in the
+    # per-width detail file written above.
     print(
         json.dumps(
             {
@@ -389,7 +391,7 @@ def main() -> None:
                 "unit": "sec",
                 "sf": sf,
                 "n_queries": len(timings),
-                "queries": {"_detail": "BENCH_LOCAL.json"},
+                "queries": {"_detail": detail_name},
             },
             separators=(",", ":"),
         )

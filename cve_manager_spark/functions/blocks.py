@@ -20,15 +20,21 @@ global diff captured ANOTHER query's checkpoint/persist ids, and
 freeing those crashes that query (checkpoint) or silently recomputes it
 (persist). All helpers are Spark-Connect-safe: with no JVM
 SparkContext handle they degrade to no-ops (cleanup skipped, semantics
-unchanged), mirroring tune()'s Connect fallback.
+unchanged), mirroring tune()'s Connect fallback, and each warns once
+per process that it did.
 """
 
 from __future__ import annotations
 
+import logging
 from contextlib import contextmanager
 from typing import Iterator
 
 from pyspark.sql import DataFrame, SparkSession
+
+from cve_manager_spark.session import warn_once
+
+_log = logging.getLogger(__name__)
 
 
 def checkpoint_rdd_ids(df: DataFrame) -> set[int]:
@@ -45,7 +51,11 @@ def checkpoint_rdd_ids(df: DataFrame) -> set[int]:
         if plan.getClass().getName().endswith(".LogicalRDD"):
             return {int(plan.rdd().id())}
     except Exception:
-        pass
+        warn_once(
+            _log, "checkpoint_rdd_ids",
+            "no JVM plan handle (Spark Connect?): checkpoint blocks are "
+            "not tracked for cleanup", exc_info=True,
+        )
     return set()
 
 
@@ -58,6 +68,11 @@ def persistent_rdd_ids(spark: SparkSession) -> set[int]:
     try:
         jsc = spark.sparkContext._jsc
     except Exception:
+        warn_once(
+            _log, "persistent_rdd_ids",
+            "no SparkContext handle (Spark Connect?): persistent RDDs "
+            "cannot be listed", exc_info=True,
+        )
         return set()
     return {int(i) for i in jsc.getPersistentRDDs().keySet().toArray()}
 
@@ -74,6 +89,11 @@ def unpersist_rdd_ids(spark: SparkSession, ids: set[int]) -> None:
     try:
         jmap = spark.sparkContext._jsc.getPersistentRDDs()
     except Exception:
+        warn_once(
+            _log, "unpersist_rdd_ids",
+            "no SparkContext handle (Spark Connect?): block cleanup "
+            "skipped", exc_info=True,
+        )
         return
     for i in ids:
         rdd = jmap.get(i)

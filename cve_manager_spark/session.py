@@ -18,7 +18,11 @@ harness passes its own SparkSession to `__spark_entry__.entry`).
 
 from __future__ import annotations
 
+import logging
+
 from pyspark.sql import SparkSession
+
+_log = logging.getLogger(__name__)
 
 # Runtime-settable confs (safe on a live session).
 RUNTIME_CONF = {
@@ -123,6 +127,21 @@ def get_session(app_name: str = "cve_manager_spark", master: str | None = None) 
 # target id and is tuned from scratch.
 _TUNED: set[str] = set()
 
+# Degraded paths already reported, so each warns once per process.
+_WARNED: set[str] = set()
+
+
+def warn_once(
+    logger: logging.Logger, key: str, msg: str, *args, **kwargs
+) -> None:
+    """Log ``msg`` as a WARNING the first time ``key`` is seen in this
+    process: a path that runs degraded (a conf that could not be set,
+    cleanup skipped without a SparkContext) says so once instead of
+    passing silently or repeating per call."""
+    if key not in _WARNED:
+        _WARNED.add(key)
+        logger.warning(msg, *args, **kwargs)
+
 
 def _shuffle_partitions(spark: SparkSession) -> int:
     """Shuffle width derived from the session's core count: one
@@ -134,7 +153,12 @@ def _shuffle_partitions(spark: SparkSession) -> int:
     try:
         return max(32, int(spark.sparkContext.defaultParallelism))
     except Exception:
-        return 32  # Spark Connect: no SparkContext handle
+        warn_once(
+            _log, "shuffle_partitions",
+            "no SparkContext (Spark Connect?): shuffle partitions fall "
+            "back to 32", exc_info=True,
+        )
+        return 32
 
 
 def tune(spark: SparkSession) -> SparkSession:
@@ -160,7 +184,10 @@ def tune(spark: SparkSession) -> SparkSession:
         except Exception:
             # Non-runtime-settable in this deployment — keep going; every
             # conf above is runtime-settable on stock Spark 3.5/4.x.
-            pass
+            warn_once(
+                _log, f"conf:{k}", "could not set %s=%s; keeping the "
+                "session's value", k, v, exc_info=True,
+            )
     if key is not None:
         _TUNED.add(key)
     return spark

@@ -11,9 +11,23 @@ The mergeable states (upsert, rollup and the sketch family) share one
 :func:`snapshot_sink`: each supplies only its state transition
 ``update(batch_df, prev)``. Every sink but :func:`stream_cdf_tail`
 starts through :func:`_start`.
+
+Three state families live under ``{out_dir}/_state_v{n}`` version dirs.
+A SNAPSHOT version (:func:`snapshot_sink`) is the whole state, read as
+the newest version. An OVERLAY version (the DAU key set, the join views
+and the two-stream dim state) holds the full content of only the
+partition values (``day`` or bucket ``kb``) its batch touched, so the
+live state is each value's newest owner. A UNION version (the two-stream
+facts) holds the rows its batch appended, so the live state is every
+version's rows. The two log-structured families share one composer
+(:func:`_overlay_compose`), one writer (:func:`_write_version`, always
+through :func:`_sized`) and one fold (:func:`_fold_state`); the join
+views also share one drop-then-re-add step (:func:`_replace_keys`).
 """
 
 from __future__ import annotations
+
+from functools import reduce
 
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
@@ -136,6 +150,30 @@ def snapshot_sink(stream_df: DataFrame, out_dir: str, update):
 read_upsert_state = read_state
 
 
+def _newest_per_key(df: DataFrame, key_cols, order_cols) -> DataFrame:
+    """The newest row per ``key_cols``: rank 1 by ``order_cols``, all
+    descending."""
+    w = Window.partitionBy(*key_cols).orderBy(
+        *[F.col(c).desc() for c in order_cols]
+    )
+    return (
+        df.withColumn("__rn", F.row_number().over(w))
+        .where(F.col("__rn") == 1)
+        .drop("__rn")
+    )
+
+
+def _newest_wins(
+    old: DataFrame | None, new: DataFrame, key_cols, order_cols
+) -> DataFrame:
+    """Newest row per key of ``old`` ∪ ``new``, ties on ``order_cols``
+    to ``new`` (MERGE "when matched then update")."""
+    cur = new.withColumn("__src", F.lit(1))
+    if old is not None:
+        cur = old.withColumn("__src", F.lit(0)).unionByName(cur)
+    return _newest_per_key(cur, key_cols, [*order_cols, "__src"]).drop("__src")
+
+
 def foreach_batch_upsert(
     stream_df: DataFrame,
     out_dir: str,
@@ -159,17 +197,7 @@ def foreach_batch_upsert(
     """
 
     def update(batch_df: DataFrame, prev: DataFrame | None) -> DataFrame:
-        cur = batch_df.withColumn("__src", F.lit(1))
-        if prev is not None:
-            cur = prev.withColumn("__src", F.lit(0)).unionByName(cur)
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols], F.col("__src").desc()
-        )
-        return (
-            cur.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn", "__src")
-        )
+        return _newest_wins(prev, batch_df, key_cols, order_cols)
 
     return snapshot_sink(stream_df, out_dir, update)
 
@@ -227,8 +255,8 @@ def foreach_batch_rollup(stream_df: DataFrame, out_dir: str):
 def _list_day_dirs(spark, ver_dir: str, col: str = "day") -> list[str]:
     """<col>=<value> partition values present under one log-structured
     version dir — directory NAMES only (Hadoop FS metadata, never row
-    data). Shared by the day-keyed DAU state and the bucket-keyed join
-    view; ``col`` names the hive partition column.
+    data), listed for :func:`_overlay_compose`; ``col`` names the hive
+    partition column.
 
     A version dir holding parquet files DIRECTLY (no ``<col>=`` subdirs)
     is a pre-r7 FLAT snapshot; silently returning [] for it would drop
@@ -263,53 +291,112 @@ def _list_day_dirs(spark, ver_dir: str, col: str = "day") -> list[str]:
 def _overlay_compose(
     spark,
     out_dir: str,
-    col: str = "day",
+    col: str = "kb",
     upto: int | None = None,
     parts_filter: set[str] | None = None,
+    union: bool = False,
 ) -> DataFrame | None:
-    """Current state of a log-structured overlay: each ``_state_v{b}``
-    dir holds the FULL content for only the ``col`` partitions batch
-    ``b`` touched, so the live state is, per partition value, the
-    newest version owning it. The value→version owner map is computed
-    driver-side from directory listings (bounded: values × versions
-    names, no rows), and each version is read through path-selected
-    ``<col>=`` dirs — a version contributes only the partitions it
-    still owns, pruned at the file-listing level. ``upto`` excludes
-    versions ≥ a replayed batch id; ``parts_filter`` restricts
-    composition to a touched set. Shared by the day-keyed DAU state
-    and the bucket-keyed incrementally maintained join view."""
-    versions = _list_state_versions(spark, out_dir)
-    if upto is not None:
-        versions = [v for v in versions if v < upto]
-    if not versions:
-        return None
-    owner: dict[str, int] = {}
-    for v in versions:  # ascending: later versions take ownership
-        for d in _list_day_dirs(spark, f"{out_dir}/{_STATE_PREFIX}{v}", col):
-            owner[d] = v
-    if parts_filter is not None:
-        owner = {d: v for d, v in owner.items() if d in parts_filter}
-    if not owner:
-        return None
-    by_version: dict[int, list[str]] = {}
-    for d, v in owner.items():
-        by_version.setdefault(v, []).append(d)
-    parts = []
-    for v in sorted(by_version):
-        ver_dir = f"{out_dir}/{_STATE_PREFIX}{v}"
-        paths = [f"{ver_dir}/{col}={d}" for d in sorted(by_version[v])]
-        parts.append(spark.read.option("basePath", ver_dir).parquet(*paths))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    """Current state of a log-structured state: each ``_state_v{b}`` dir
+    holds rows for only the ``col`` partition values batch ``b``
+    touched. An overlay version holds the FULL content of its values,
+    so the live state is, per value, the newest version owning it; a
+    ``union`` (insert-only) state keeps every version's rows. The
+    value→version map is computed driver-side from directory listings
+    (bounded: values × versions names, no rows), and each version is
+    read through path-selected ``<col>=`` dirs — pruned at the
+    file-listing level. ``upto`` excludes versions ≥ a replayed batch
+    id; ``parts_filter`` restricts composition to a touched set."""
+    read: dict[int, list[str]] = {}
+    for v in _list_state_versions(spark, out_dir):
+        if upto is not None and v >= upto:
+            break
+        read[v] = [
+            d
+            for d in _list_day_dirs(spark, f"{out_dir}/{_STATE_PREFIX}{v}", col)
+            if parts_filter is None or d in parts_filter
+        ]
+    if not union:  # ascending: later versions take ownership
+        owner = {d: v for v, ds in read.items() for d in ds}
+        read = {v: [d for d in ds if owner[d] == v] for v, ds in read.items()}
+    frames = []
+    for v, ds in read.items():
+        if ds:
+            ver_dir = f"{out_dir}/{_STATE_PREFIX}{v}"
+            paths = [f"{ver_dir}/{col}={d}" for d in sorted(ds)]
+            frames.append(spark.read.option("basePath", ver_dir).parquet(*paths))
+    return reduce(DataFrame.unionByName, frames) if frames else None
 
 
-def _keyset_compose(
-    spark, out_dir: str, upto: int | None = None, days: set[str] | None = None
-) -> DataFrame | None:
-    """Day-keyed face of :func:`_overlay_compose` (the DAU key-set)."""
-    return _overlay_compose(spark, out_dir, "day", upto, days)
+def _ss_kb(col_name: str, n_buckets: int):
+    """Bucket of a join key: ``crc32(key) % n_buckets``, the ``kb``
+    partition every join-view state is laid out by."""
+    return F.pmod(
+        F.crc32(F.col(col_name).cast("string")), n_buckets
+    ).cast("int")
+
+
+def _touched(df: DataFrame, col: str = "kb") -> set[str]:
+    """Distinct ``col`` values of ``df`` as partition-dir names: the
+    batch's touched set, bounded driver scalars (a micro-batch spans
+    few days or buckets)."""
+    return {str(r[0]) for r in df.select(col).distinct().collect()}
+
+
+def _write_version(
+    df: DataFrame, out_dir: str, col: str = "kb", batch_id: int | None = None
+) -> int:
+    """Write ``df`` as one log-structured version, REBALANCEd per
+    ``col`` value (:func:`_sized`) and partitioned by it. A sink keyed
+    by micro-batch writes version ``batch_id`` in overwrite mode, so a
+    replayed batch rewrites its own version; otherwise the write takes
+    the next version and fails if that dir exists. Returns the
+    version."""
+    if batch_id is None:
+        v, mode = _next_version(df.sparkSession, out_dir), "errorifexists"
+    else:
+        v, mode = batch_id, "overwrite"
+    _sized(df, col).write.mode(mode).partitionBy(col).parquet(
+        f"{out_dir}/{_STATE_PREFIX}{v}"
+    )
+    return v
+
+
+def _strictly_newer(
+    rows: DataFrame, state: DataFrame, key: str, order_col: str
+) -> DataFrame:
+    """``rows`` whose ``order_col`` is strictly newer than every
+    ``state`` row of their key, or whose key the state lacks — the true
+    MERGE filter: ties keep the state, so re-delivering an update is a
+    no-op and out-of-order CDC cannot clobber newer state."""
+    cur = state.groupBy(key).agg(F.max(order_col).alias("__cur_ord"))
+    return (
+        rows.join(cur, key, "left")
+        .where(
+            F.col("__cur_ord").isNull() | (F.col(order_col) > F.col("__cur_ord"))
+        )
+        .drop("__cur_ord")
+    )
+
+
+def _replace_keys(
+    out_dir: str,
+    prev: DataFrame | None,
+    rows: DataFrame | None,
+    keys: DataFrame,
+    key: str,
+    batch_id: int | None = None,
+) -> int | None:
+    """The bucket-overlay rewrite step: the next version holds the
+    touched buckets' current rows ``prev`` minus those whose ``key`` is
+    in ``keys``, plus ``rows``. Dropping then re-adding by key makes
+    re-applying the same change a no-op. Writes nothing when there is
+    neither side; returns the version written."""
+    if prev is not None:
+        keep = prev.join(keys, on=key, how="left_anti")
+        rows = keep if rows is None else keep.unionByName(rows)
+    if rows is None:
+        return None
+    return _write_version(rows, out_dir, batch_id=batch_id)
 
 
 def foreach_batch_distinct_rollup(stream_df: DataFrame, out_dir: str):
@@ -347,17 +434,13 @@ def foreach_batch_distinct_rollup(stream_df: DataFrame, out_dir: str):
             .where(F.col("day").isNotNull())
             .distinct()
         )
-        # the batch's touched-day set: bounded driver scalars (a micro-
-        # batch spans few days; with a watermark, late days are bounded)
-        days = {str(r["day"]) for r in part.select("day").distinct().collect()}
-        prev = _keyset_compose(spark, out_dir, upto=batch_id, days=days)
+        prev = _overlay_compose(
+            spark, out_dir, "day", upto=batch_id,
+            parts_filter=_touched(part, "day"),
+        )
         if prev is not None:
             part = prev.unionByName(part).distinct()
-        (
-            _sized(part, "day").write.mode("overwrite")
-            .partitionBy("day")
-            .parquet(f"{out_dir}/{_STATE_PREFIX}{batch_id}")
-        )
+        _write_version(part, out_dir, "day", batch_id)
 
     return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
 
@@ -390,19 +473,19 @@ def compact_keyset_state(spark, out_dir: str) -> dict[str, int]:
     takes the newest owner per day — a crash mid-cleanup just leaves
     superseded garbage the next compaction re-deletes.
     """
-    return _fold_state(
-        spark, out_dir, "day",
-        lambda upto: _keyset_compose(spark, out_dir, upto=upto),
-    )
+    return compact_overlay_state(spark, out_dir, "day")
 
 
-def _fold_state(spark, out_dir: str, col: str, compose) -> dict[str, int]:
+def _fold_state(
+    spark, out_dir: str, col: str, union: bool = False
+) -> dict[str, int]:
     """Shared fold-and-swap for every log-structured state family:
-    write ``compose(upto=newest)`` into a verified tmp dir, swap it in
-    as the base version (the newest FOLDED batch id), delete the older
-    folded dirs. The newest version is never folded (replay safety —
-    see :func:`compact_keyset_state`); crash at any point leaves either
-    the old layout or superseded garbage the next fold re-deletes."""
+    write the compose of every version but the newest into a verified
+    tmp dir, swap it in as the base version (the newest FOLDED batch
+    id), delete the older folded dirs. The newest version is never
+    folded (replay safety — see :func:`compact_keyset_state`); crash at
+    any point leaves either the old layout or superseded garbage the
+    next fold re-deletes."""
     import shutil
     from pathlib import Path
 
@@ -411,7 +494,9 @@ def _fold_state(spark, out_dir: str, col: str, compose) -> dict[str, int]:
         return {"folded": 0, "base": versions[-2] if len(versions) == 2 else -1}
     fold = versions[:-1]
     base_v = fold[-1]
-    folded = compose(versions[-1])
+    folded = _overlay_compose(
+        spark, out_dir, col, upto=versions[-1], union=union
+    )
     n_expect = folded.count()
     tmp = Path(out_dir) / "_compact_tmp"
     if tmp.exists():
@@ -441,10 +526,7 @@ def compact_overlay_state(
     the fold writes each bucket's current content once and the
     superseded owners disappear. Same replay-safe swap as the DAU
     key-set compaction, shared through :func:`_fold_state`."""
-    return _fold_state(
-        spark, out_dir, col,
-        lambda upto: _overlay_compose(spark, out_dir, col, upto=upto),
-    )
+    return _fold_state(spark, out_dir, col)
 
 
 def compact_union_state(
@@ -454,26 +536,7 @@ def compact_union_state(
     compose is the union of every version's rows, so the fold
     concatenates them into one base version dir — reads shrink from
     O(versions) file listings to two."""
-    return _fold_state(
-        spark, out_dir, col,
-        lambda upto: _union_compose_upto(spark, out_dir, col, upto),
-    )
-
-
-def _union_compose_upto(spark, out_dir, col, upto):
-    versions = [v for v in _list_state_versions(spark, out_dir) if v < upto]
-    parts = []
-    for v in versions:
-        ver_dir = f"{out_dir}/{_STATE_PREFIX}{v}"
-        days = _list_day_dirs(spark, ver_dir, col)
-        if not days:
-            continue
-        paths = [f"{ver_dir}/{col}={d}" for d in sorted(days)]
-        parts.append(spark.read.option("basePath", ver_dir).parquet(*paths))
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
+    return _fold_state(spark, out_dir, col, union=True)
 
 
 def compact_two_stream_state(spark, out_dir: str) -> dict[str, dict]:
@@ -500,7 +563,7 @@ def read_dau_state(spark, out_dir: str) -> DataFrame | None:
     ``foreach_batch_distinct_rollup``: (day, dau) from the composed
     (day, user) key-set state (per day, the newest version dir owning
     that day)."""
-    snap = _keyset_compose(spark, out_dir)
+    snap = _overlay_compose(spark, out_dir, "day")
     if snap is None:
         return None
     return snap.groupBy("day").agg(F.count(F.lit(1)).alias("dau"))
@@ -514,7 +577,7 @@ def read_stickiness_state(spark, out_dir: str) -> DataFrame | None:
     to its 7 trailing windows → hash-partitioned COUNT DISTINCT), and
     the series matches the batch query row-for-row (tested). Emits
     (day, dau, wau, stickiness_ppm) for days with activity."""
-    du = _keyset_compose(spark, out_dir)
+    du = _overlay_compose(spark, out_dir, "day")
     if du is None:
         return None
     expanded = du.select(
@@ -720,14 +783,8 @@ def foreach_batch_merge_lake(
     # anything stored inside it
     def apply_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(*key_cols).orderBy(
-            *[F.col(c).desc() for c in order_cols]
-        )
-        newest = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
-        )
+        newest = _newest_per_key(batch_df, key_cols, order_cols)
+
         def winners_vs(incumbent_df: DataFrame) -> DataFrame:
             # MERGE condition: update only when the incoming row is newer.
             # Batches are not time-ordered (a later file can carry older
@@ -737,17 +794,7 @@ def foreach_batch_merge_lake(
             incumbent = incumbent_df.join(
                 newest.select(*key_cols), key_cols, "left_semi"
             )
-            both = incumbent.withColumn("__src", F.lit(0)).unionByName(
-                newest.withColumn("__src", F.lit(1))
-            )
-            ww = Window.partitionBy(*key_cols).orderBy(
-                *[F.col(c).desc() for c in order_cols], F.col("__src").desc()
-            )
-            return (
-                both.withColumn("__rn", F.row_number().over(ww))
-                .where(F.col("__rn") == 1)
-                .drop("__rn", "__src")
-            )
+            return _newest_wins(incumbent, newest, key_cols, order_cols)
 
         tdir = Path(table_dir)
         if not any(tdir.glob("*.parquet")):
@@ -791,14 +838,13 @@ def foreach_batch_merge_lake(
     return _marker_sink(stream_df, table_dir, apply_batch)
 
 
-def read_vectors_stream(
-    spark: DataFrame, path: str, max_files_per_trigger: int | None = None
+def _file_stream(
+    spark, path: str, fallback_schema: str, max_files_per_trigger: int | None
 ) -> DataFrame:
-    """File-based embeddings stream (parquet dir of (vec_id, embedding[,
-    label]) files — the nightly-crawl drop-folder shape). Schema must be
-    explicit for readStream; probe a batch read so the element type
-    (float vs double) follows the files, falling back to the testdata
-    layout for a not-yet-populated dir."""
+    """Parquet drop-folder stream. readStream needs an explicit schema,
+    so a batch read probes it from the files (column types follow what
+    landed), falling back to ``fallback_schema`` for a not-yet-populated
+    dir."""
     from pyspark.errors import AnalysisException
 
     from cve_manager_spark.session import tune
@@ -807,11 +853,24 @@ def read_vectors_stream(
     try:
         schema = spark.read.parquet(path).schema
     except AnalysisException:
-        schema = "vec_id bigint, embedding array<float>, label int"
+        schema = fallback_schema
     reader = spark.readStream.schema(schema)
     if max_files_per_trigger:
         reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     return reader.parquet(path)
+
+
+def read_vectors_stream(
+    spark: DataFrame, path: str, max_files_per_trigger: int | None = None
+) -> DataFrame:
+    """File-based embeddings stream (parquet dir of (vec_id, embedding[,
+    label]) files — the nightly-crawl drop-folder shape); the probed
+    schema carries the files' element type (float vs double), the
+    fallback is the testdata layout."""
+    return _file_stream(
+        spark, path, "vec_id bigint, embedding array<float>, label int",
+        max_files_per_trigger,
+    )
 
 
 def foreach_batch_semantic_dedup(
@@ -1001,19 +1060,10 @@ def read_documents_stream(
 ) -> DataFrame:
     """File-based documents stream (parquet dir of crawl drops); schema
     probed from a batch read, falling back to the testdata layout."""
-    from pyspark.errors import AnalysisException
-
-    from cve_manager_spark.session import tune
-
-    tune(spark)
-    try:
-        schema = spark.read.parquet(path).schema
-    except AnalysisException:
-        schema = "doc_id bigint, source string, lang string, text string"
-    reader = spark.readStream.schema(schema)
-    if max_files_per_trigger:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
-    return reader.parquet(path)
+    return _file_stream(
+        spark, path, "doc_id bigint, source string, lang string, text string",
+        max_files_per_trigger,
+    )
 
 
 def foreach_batch_minhash_dedup(
@@ -1708,50 +1758,21 @@ def foreach_batch_join_view(
 
     def write_batch(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession
-        w = Window.partitionBy(dim_key).orderBy(F.col(order_col).desc())
-        delta = (
-            batch_df.withColumn("__rn", F.row_number().over(w))
-            .where(F.col("__rn") == 1)
-            .drop("__rn")
+        delta = _newest_per_key(batch_df, [dim_key], [order_col]).withColumn(
+            "kb", _ss_kb(dim_key, n_buckets)
         )
-        kb = F.pmod(F.crc32(F.col(dim_key).cast("string")), n_buckets).cast(
-            "int"
-        )
-        delta = delta.withColumn("kb", kb)
-        touched = {
-            str(r["kb"]) for r in delta.select("kb").distinct().collect()
-        }
+        touched = _touched(delta)
         if not touched:
             return
         prev = _overlay_compose(
-            spark, out_dir, "kb", upto=batch_id, parts_filter=touched
+            spark, out_dir, upto=batch_id, parts_filter=touched
         )
         if prev is not None:
-            # true MERGE: an update only beats a strictly older view row
-            # (ties keep the view — re-delivering the same update is a
-            # no-op), so out-of-order CDC cannot clobber newer state
-            cur = prev.groupBy(dim_key).agg(
-                F.max(order_col).alias("__cur_ord")
-            )
-            delta = (
-                delta.join(cur, dim_key, "left")
-                .where(
-                    F.col("__cur_ord").isNull()
-                    | (F.col(order_col) > F.col("__cur_ord"))
-                )
-                .drop("__cur_ord")
-            )
+            delta = _strictly_newer(delta, prev, dim_key, order_col)
         facts = spark.read.parquet(facts_path)
         joined = facts.join(delta, facts[facts_key] == delta[dim_key])
-        if prev is not None:
-            keep = prev.join(
-                delta.select(dim_key), on=dim_key, how="left_anti"
-            )
-            joined = keep.unionByName(joined)
-        (
-            joined.write.mode("overwrite")
-            .partitionBy("kb")
-            .parquet(f"{out_dir}/{_STATE_PREFIX}{batch_id}")
+        _replace_keys(
+            out_dir, prev, joined, delta.select(dim_key), dim_key, batch_id
         )
 
     return _start(stream_df, write_batch, f"{out_dir}/_checkpoint")
@@ -1760,7 +1781,7 @@ def foreach_batch_join_view(
 def read_join_view(spark, out_dir: str) -> DataFrame | None:
     """Current join view: per-bucket-newest composition, bucket column
     dropped."""
-    df = _overlay_compose(spark, out_dir, "kb")
+    df = _overlay_compose(spark, out_dir)
     return None if df is None else df.drop("kb")
 
 
@@ -1792,49 +1813,37 @@ def apply_facts_changes(
     is |changed rows| + |touched buckets|, never |view|. Writes one
     new log-structured version dir (latest + 1), read by the same
     per-bucket-newest composition as the dim-side sink."""
+    return _apply_changes(
+        spark, out_dir, changes_df, fact_id, facts_key, facts_key, n_buckets,
+        lambda adds: adds.join(dim_df, adds[facts_key] == dim_df[dim_key]),
+    )
+
+
+def _apply_changes(
+    spark, out_dir, changes_df, key, bucket_key, facts_key, n_buckets,
+    join_adds,
+) -> dict:
+    """One change-data-feed step on a join view, shared by both sides:
+    the view rows whose ``key`` the changeset names are dropped from the
+    buckets of its ``bucket_key`` values, and the surviving images
+    ('insert' + 'update_postimage'), joined by ``join_adds``, re-enter
+    as the next version."""
+    touched = _touched(
+        changes_df.select(_ss_kb(bucket_key, n_buckets).alias("kb"))
+    )
+    if not touched:
+        return {"version": None, "touched_buckets": 0}
     adds = changes_df.where(
         F.col("_change_type").isin("insert", "update_postimage")
     ).drop("_change_type", "_change_count")
-    kb_of = lambda c: F.pmod(  # noqa: E731
-        F.crc32(F.col(c).cast("string")), n_buckets
-    ).cast("int")
-    touched = {
-        str(r["kb"])
-        for r in changes_df.select(kb_of(facts_key).alias("kb"))
-        .distinct()
-        .collect()
-    }
-    if not touched:
-        return {"version": None, "touched_buckets": 0}
-    changed_ids = changes_df.select(fact_id).distinct()
-    joined = adds.join(dim_df, adds[facts_key] == dim_df[dim_key])
-    return _apply_view_delta(
-        spark, out_dir, joined, changed_ids, fact_id, facts_key,
-        n_buckets, touched,
+    v = _replace_keys(
+        out_dir,
+        _overlay_compose(spark, out_dir, parts_filter=touched),
+        join_adds(adds).withColumn("kb", _ss_kb(facts_key, n_buckets)),
+        changes_df.select(key).distinct(),
+        key,
     )
-
-
-def _apply_view_delta(
-    spark, out_dir, joined, changed_ids, fact_id, facts_key, n_buckets,
-    touched,
-):
-    kb = F.pmod(F.crc32(F.col(facts_key).cast("string")), n_buckets).cast(
-        "int"
-    )
-    joined = joined.withColumn("kb", kb)
-    next_v = _next_version(spark, out_dir)
-    prev = _overlay_compose(
-        spark, out_dir, "kb", upto=next_v, parts_filter=touched
-    )
-    if prev is not None:
-        keep = prev.join(changed_ids, on=fact_id, how="left_anti")
-        joined = keep.unionByName(joined)
-    (
-        joined.write.mode("overwrite")
-        .partitionBy("kb")
-        .parquet(f"{out_dir}/{_STATE_PREFIX}{next_v}")
-    )
-    return {"version": next_v, "touched_buckets": len(touched)}
+    return {"version": v, "touched_buckets": len(touched)}
 
 
 def foreach_batch_heavy_hitters(
@@ -2015,36 +2024,6 @@ def stream_cdf_tail(
 # ---------------------------------------------------------------------------
 
 
-def _union_compose(
-    spark, out_dir: str, col: str = "kb",
-    parts_filter: set[str] | None = None,
-) -> DataFrame | None:
-    """Additive counterpart of :func:`_overlay_compose` for INSERT-ONLY
-    log-structured state (the accumulated facts relation): every
-    version contributes the rows it appended, so the live state is the
-    UNION of all versions' selected ``col`` partitions — pruned at the
-    file-listing level exactly like the overlay reads."""
-    versions = _list_state_versions(spark, out_dir)
-    if not versions:
-        return None
-    parts = []
-    for v in versions:
-        ver_dir = f"{out_dir}/{_STATE_PREFIX}{v}"
-        days = _list_day_dirs(spark, ver_dir, col)
-        if parts_filter is not None:
-            days = [d for d in days if d in parts_filter]
-        if not days:
-            continue
-        paths = [f"{ver_dir}/{col}={d}" for d in sorted(days)]
-        parts.append(spark.read.option("basePath", ver_dir).parquet(*paths))
-    if not parts:
-        return None
-    df = parts[0]
-    for p in parts[1:]:
-        df = df.unionByName(p)
-    return df
-
-
 class _StateLock:
     """Cross-query mutex for state shared by TWO live streaming queries
     on one host (the fact-side and dim-side sinks of the two-stream
@@ -2087,12 +2066,6 @@ class _StateLock:
         os.close(self._fd)
         self.path.unlink(missing_ok=True)
         return False
-
-
-def _ss_kb(col_name: str, n_buckets: int):
-    return F.pmod(
-        F.crc32(F.col(col_name).cast("string")), n_buckets
-    ).cast("int")
 
 
 def _ss_read_watermark(out_dir: str):
@@ -2172,13 +2145,11 @@ def foreach_batch_ss_facts(
             ddir = f"{out_dir}/dim_state"
             vdir = f"{out_dir}/view"
             fb0 = batch_df.withColumn("kb", _ss_kb(facts_key, n_buckets))
-            touched = {
-                str(r["kb"]) for r in fb0.select("kb").distinct().collect()
-            }
+            touched = _touched(fb0)
             if not touched:
                 return
-            prev_facts = _union_compose(
-                spark, fdir, "kb", parts_filter=touched
+            prev_facts = _overlay_compose(
+                spark, fdir, parts_filter=touched, union=True
             )
             new_facts = fb0
             if prev_facts is not None:
@@ -2191,17 +2162,11 @@ def foreach_batch_ss_facts(
             new_facts = new_facts.localCheckpoint(eager=True)
             _pins |= _checkpoint_rdd_ids(new_facts)
             if not new_facts.isEmpty():
-                _sized(new_facts, "kb").write.partitionBy("kb").parquet(
-                    f"{fdir}/{_STATE_PREFIX}{_next_version(spark, fdir)}"
-                )
-            dim_cur = _overlay_compose(
-                spark, ddir, "kb", parts_filter=touched
-            )
+                _write_version(new_facts, fdir)
+            dim_cur = _overlay_compose(spark, ddir, parts_filter=touched)
             if dim_cur is None:
                 return  # no dim rows yet: the facts wait in state
-            prev_view = _overlay_compose(
-                spark, vdir, "kb", parts_filter=touched
-            )
+            prev_view = _overlay_compose(spark, vdir, parts_filter=touched)
             cand = fb0
             if prev_view is not None:
                 cand = fb0.join(
@@ -2214,13 +2179,8 @@ def foreach_batch_ss_facts(
             _pins |= _checkpoint_rdd_ids(add)
             if add.isEmpty():
                 return  # nothing the view is missing: replay no-op
-            out = (
-                prev_view.unionByName(add)
-                if prev_view is not None
-                else add
-            )
-            _sized(out, "kb").write.partitionBy("kb").parquet(
-                f"{vdir}/{_STATE_PREFIX}{_next_version(spark, vdir)}"
+            _write_version(
+                add if prev_view is None else prev_view.unionByName(add), vdir
             )
 
     return _start(stream_df, apply, f"{out_dir}/_checkpoint_facts")
@@ -2273,54 +2233,26 @@ def foreach_batch_ss_dim(
             fdir = f"{out_dir}/facts_state"
             ddir = f"{out_dir}/dim_state"
             vdir = f"{out_dir}/view"
-            w = Window.partitionBy(dim_key).orderBy(
-                F.col(order_col).desc()
-            )
-            delta0 = (
-                batch_df.withColumn("__rn", F.row_number().over(w))
-                .where(F.col("__rn") == 1)
-                .drop("__rn")
-            )
+            delta0 = _newest_per_key(batch_df, [dim_key], [order_col])
             hw = _ss_read_watermark(out_dir)
             if watermark_delay is not None and hw is not None:
                 delta0 = delta0.where(
                     F.col(order_col) >= F.lit(hw - watermark_delay)
                 )
             delta0 = delta0.withColumn("kb", _ss_kb(dim_key, n_buckets))
-            touched = {
-                str(r["kb"])
-                for r in delta0.select("kb").distinct().collect()
-            }
+            touched = _touched(delta0)
             if not touched:
                 return
-            prev_dim = _overlay_compose(
-                spark, ddir, "kb", parts_filter=touched
-            )
+            prev_dim = _overlay_compose(spark, ddir, parts_filter=touched)
             delta_new = delta0
             if prev_dim is not None:
-                cur = prev_dim.groupBy(dim_key).agg(
-                    F.max(order_col).alias("__cur_ord")
-                )
-                delta_new = (
-                    delta0.join(cur, dim_key, "left")
-                    .where(
-                        F.col("__cur_ord").isNull()
-                        | (F.col(order_col) > F.col("__cur_ord"))
-                    )
-                    .drop("__cur_ord")
-                )
+                delta_new = _strictly_newer(delta0, prev_dim, dim_key, order_col)
             delta_new = delta_new.localCheckpoint(eager=True)  # pin
             _pins |= _checkpoint_rdd_ids(delta_new)
             applied = not delta_new.isEmpty()
             if applied:
-                new_keys = delta_new.select(dim_key)
-                new_dim = delta_new
-                if prev_dim is not None:
-                    new_dim = prev_dim.join(
-                        new_keys, on=dim_key, how="left_anti"
-                    ).unionByName(delta_new)
-                _sized(new_dim, "kb").write.partitionBy("kb").parquet(
-                    f"{ddir}/{_STATE_PREFIX}{_next_version(spark, ddir)}"
+                _replace_keys(
+                    ddir, prev_dim, delta_new, delta_new.select(dim_key), dim_key
                 )
             # current image per batch key = strictly-newer delta over
             # the pre-batch state restricted to the batch's keys
@@ -2339,52 +2271,30 @@ def foreach_batch_ss_dim(
                 img = prev_dim.join(keys0, dim_key, "left_semi")
             else:
                 return  # no images anywhere for these keys
-            prev_view = _overlay_compose(
-                spark, vdir, "kb", parts_filter=touched
-            )
+            prev_view = _overlay_compose(spark, vdir, parts_filter=touched)
             if applied:
                 rebuild_keys = keys0
             else:
                 # pure replay/stale batch: rebuild only keys whose view
                 # rows trail the state image (the lost-view-write gap);
                 # none stale → full no-op, no version dir written
-                if prev_view is None:
-                    rebuild_keys = img.select(dim_key)
-                else:
-                    vord = prev_view.groupBy(dim_key).agg(
-                        F.max(order_col).alias("__v_ord")
-                    )
-                    rebuild_keys = (
-                        img.join(vord, dim_key, "left")
-                        .where(
-                            F.col("__v_ord").isNull()
-                            | (F.col("__v_ord") < F.col(order_col))
-                        )
-                        .select(dim_key)
-                    )
+                rebuild_keys = img.select(dim_key)
+                if prev_view is not None:
+                    rebuild_keys = _strictly_newer(
+                        img, prev_view, dim_key, order_col
+                    ).select(dim_key)
                 if rebuild_keys.isEmpty():
                     return
             img_r = img.join(rebuild_keys, dim_key, "left_semi")
-            facts_rel = _union_compose(
-                spark, fdir, "kb", parts_filter=touched
+            facts_rel = _overlay_compose(
+                spark, fdir, parts_filter=touched, union=True
             )
             rebuilt = None
             if facts_rel is not None:
                 rebuilt = facts_rel.drop("kb").join(
                     img_r.drop("kb"), F.col(facts_key) == F.col(dim_key)
                 ).withColumn("kb", _ss_kb(facts_key, n_buckets))
-            if prev_view is not None:
-                keep = prev_view.join(
-                    rebuild_keys, on=dim_key, how="left_anti"
-                )
-                rebuilt = (
-                    keep if rebuilt is None
-                    else keep.unionByName(rebuilt)
-                )
-            if rebuilt is not None:
-                _sized(rebuilt, "kb").write.partitionBy("kb").parquet(
-                    f"{vdir}/{_STATE_PREFIX}{_next_version(spark, vdir)}"
-                )
+            _replace_keys(vdir, prev_view, rebuilt, rebuild_keys, dim_key)
             if applied:
                 # watermark LAST: it must never claim an order the
                 # state/view writes did not survive to reflect
@@ -2398,10 +2308,9 @@ def foreach_batch_ss_dim(
 
 
 def read_stream_stream_join(spark, out_dir: str) -> DataFrame | None:
-    """Current two-stream join view: per-bucket-newest composition,
-    bucket column dropped."""
-    df = _overlay_compose(spark, f"{out_dir}/view", "kb")
-    return None if df is None else df.drop("kb")
+    """Current two-stream join view: :func:`read_join_view` over the
+    ``view`` state under ``out_dir``."""
+    return read_join_view(spark, f"{out_dir}/view")
 
 
 # ---------------------------------------------------------------------------
@@ -2523,31 +2432,10 @@ def apply_dim_changes(
     join), an updated one replaces their dim columns, and re-applying
     the same changeset is idempotent. Cost: |changed dim rows ⋈ facts|
     + |touched buckets|, never |view|."""
-    adds = changes_df.where(
-        F.col("_change_type").isin("insert", "update_postimage")
-    ).drop("_change_type", "_change_count")
-    keys = changes_df.select(dim_key).distinct()
-    touched = {
-        str(r["kb"])
-        for r in keys.select(
-            _ss_kb(dim_key, n_buckets).alias("kb")
-        ).distinct().collect()
-    }
-    if not touched:
-        return {"version": None, "touched_buckets": 0}
-    vdir = out_dir
-    prev_view = _overlay_compose(spark, vdir, "kb", parts_filter=touched)
-    rebuilt = facts_df.join(
-        adds, facts_df[facts_key] == adds[dim_key]
-    ).withColumn("kb", _ss_kb(facts_key, n_buckets))
-    if prev_view is not None:
-        keep = prev_view.join(keys, on=dim_key, how="left_anti")
-        rebuilt = keep.unionByName(rebuilt)
-    next_v = _next_version(spark, vdir)
-    rebuilt.write.mode("overwrite").partitionBy("kb").parquet(
-        f"{vdir}/{_STATE_PREFIX}{next_v}"
+    return _apply_changes(
+        spark, out_dir, changes_df, dim_key, dim_key, facts_key, n_buckets,
+        lambda adds: facts_df.join(adds, facts_df[facts_key] == adds[dim_key]),
     )
-    return {"version": next_v, "touched_buckets": len(touched)}
 
 
 def bootstrap_join_view(
@@ -2582,9 +2470,7 @@ def bootstrap_join_view(
     ).withColumn("kb", _ss_kb(facts_key, n_buckets))
     if _next_version(spark, out_dir) > 0:
         raise ValueError(f"join view already exists under {out_dir}")
-    _sized(view, "kb").write.partitionBy("kb").parquet(
-        f"{out_dir}/{_STATE_PREFIX}0"
-    )
+    _write_version(view, out_dir)
     # park both cursors at the pinned versions (consume-nothing inits)
     facts_log.consume_changes(spark, facts_cursor, start_version=vf)
     dim_log.consume_changes(spark, dim_cursor, start_version=vd)

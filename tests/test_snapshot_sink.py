@@ -186,3 +186,109 @@ def test_stream_start_and_version_listing_stay_in_shared_helpers(fname):
         assert sink in uses["snapshot_sink"], f"{sink} bypasses snapshot_sink"
     if fname == "monitor.py":
         assert not {"_STATE_PREFIX", "_list_state_versions", "_sized"} & set(uses)
+
+
+def _calls(fname: str) -> list[tuple[str, ast.Call]]:
+    """(top-level owner, call) for every call in ``fname``."""
+    tree = ast.parse((STREAMING / fname).read_text())
+    return [
+        (top.name, node)
+        for top in tree.body
+        if isinstance(top, (ast.FunctionDef, ast.ClassDef))
+        for node in ast.walk(top)
+        if isinstance(node, ast.Call)
+    ]
+
+
+def _chain(call: ast.Call) -> list[str]:
+    """Method names along a call chain, outermost first."""
+    names = []
+    node = call
+    while isinstance(node, (ast.Call, ast.Attribute)):
+        if isinstance(node, ast.Attribute):
+            names.append(node.attr)
+        node = node.func if isinstance(node, ast.Call) else node.value
+    return names
+
+
+def test_log_structured_state_has_one_bucket_one_writer_one_composer():
+    """The bucket expression lives in ``_ss_kb``, every partitioned
+    version write goes through ``_write_version`` (``_fold_state``'s
+    tmp write is the one other partitioned write), and only the
+    composer lists partition dirs."""
+    calls = _calls("sinks.py")
+    crc = {owner for owner, c in calls if _chain(c)[:1] == ["crc32"]}
+    assert crc == {"_ss_kb"}
+    partitioned_writes = {
+        owner
+        for owner, c in calls
+        if _chain(c)[:1] == ["parquet"] and {"write", "partitionBy"} <= set(_chain(c))
+    }
+    assert partitioned_writes == {"_write_version", "_fold_state"}
+    listers = {
+        owner
+        for owner, c in calls
+        if isinstance(c.func, ast.Name) and c.func.id == "_list_day_dirs"
+    }
+    assert listers == {"_overlay_compose"}
+
+
+# ---------------------------------------------------------------------------
+# join-view file layout
+# ---------------------------------------------------------------------------
+
+
+def _parquet_files_per_bucket(out: str, version: int) -> dict[str, int]:
+    ver = Path(out) / f"_state_v{version}"
+    return {
+        d.name: len(list(d.glob("*.parquet"))) for d in ver.glob("kb=*")
+    }
+
+
+def test_join_view_versions_write_one_file_per_bucket(spark, tmp_path):
+    """Both change appliers write each touched bucket of a view version
+    as one right-sized file, however many tasks produced its rows, and
+    the view still equals the batch join."""
+    from cve_manager_spark.streaming.sinks import (
+        apply_dim_changes,
+        apply_facts_changes,
+        read_join_view,
+    )
+
+    nb = 16
+    facts = spark.range(20_000).select(
+        F.col("id").alias("f_id"),
+        (F.col("id") % 500).alias("f_key"),
+        (F.col("id") * 3).alias("f_val"),
+    ).repartition(8)
+    dim = spark.range(500).select(
+        F.col("id").alias("d_key"), (F.col("id") + 7).alias("d_val")
+    )
+    out = str(tmp_path / "view")
+
+    dim_changes = dim.withColumn("_change_type", F.lit("insert"))
+    v0 = apply_dim_changes(spark, out, dim_changes, facts, "f_key", "d_key", nb)
+    assert v0 == {"version": 0, "touched_buckets": nb}
+
+    updated = facts.where(F.col("f_id") % 10 == 0).withColumn(
+        "f_val", F.col("f_val") + 1
+    )
+    fact_changes = updated.withColumn(
+        "_change_type", F.lit("update_postimage")
+    ).repartition(8)
+    v1 = apply_facts_changes(
+        spark, out, fact_changes, dim, "f_id", "f_key", "d_key", nb
+    )
+    assert v1 == {"version": 1, "touched_buckets": nb}
+
+    for v in (0, 1):
+        files = _parquet_files_per_bucket(out, v)
+        assert len(files) == nb
+        assert set(files.values()) == {1}, files
+
+    current = facts.join(updated.select("f_id"), "f_id", "left_anti").unionByName(updated)
+    want = current.join(dim, current["f_key"] == dim["d_key"])
+    got = read_join_view(spark, out)
+    assert sorted(got.columns) == sorted(want.columns)
+    got = got.select(want.columns)
+    assert got.exceptAll(want).unionByName(want.exceptAll(got)).isEmpty()
