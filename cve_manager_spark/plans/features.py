@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 
 from cve_manager_spark.functions.helpers import dec_sum, fan_out
 from cve_manager_spark.operators import text as T
+from cve_manager_spark.plans.artifacts import scratch
 from cve_manager_spark.plans.spec import QuerySpec, registrar
 from cve_manager_spark.sources.testdata import load_table
 
@@ -3928,62 +3929,42 @@ def _timetravel_log(spark: SparkSession, sf: str):
       to doc_id + 1000000 and digested over text || ' new' (fresh
       ingest, unmatched -> appended).
 
-    The table lives in a scratch dir keyed by ``sf``: every version's
-    content is a pure function of the input parquet, so a COMPLETED
-    build (v2 manifest present) is reused across calls — repeated spec
-    runs read the same three manifests instead of re-writing the table
-    — and the DuckDB oracle recomputes each snapshot from ``documents``
-    directly. A half-built leftover (no v2) is torn down and rebuilt in
-    a private dir, then published with an atomic rename, so two racing
-    builders resolve to one complete table. Scratch size is
-    O(|documents|) with 3 tiny commits — negligible next to the scan
-    the oracle itself performs.
+    Every version's content is a pure function of the input parquet, so
+    the table is built once into a scratch root and reused — repeated
+    spec runs read the same three manifests instead of re-writing the
+    table — and the DuckDB oracle recomputes each snapshot from
+    ``documents`` directly. Scratch size is O(|documents|) with 3 tiny
+    commits — negligible next to the scan the oracle itself performs.
     """
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_tt_{slug}" / "docs_log"
-    # Manifests are zero-padded (``v{N:012d}.json`` — commitlog.py:73);
-    # checking the unpadded name never matched, so every call rebuilt the
-    # table (and rmtree'd the published one under a concurrent reader).
-    if (tdir / "_commits" / f"v{2:012d}.json").exists():
-        return TableLog(str(tdir))
-
-    docs = load_table(spark, sf, "documents")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_tt_build_")) / "docs_log"
-    docs.select("doc_id", F.md5("text").alias("digest")).write.parquet(
-        str(scratch)
-    )
-    log = TableLog(str(scratch))
-    log.init()
-    log.delete_where(spark, "doc_id % 11 = 0")
-    updates = (
-        docs.where((F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 11 != 0))
-        .select(
-            "doc_id",
-            F.md5(F.concat(F.col("text"), F.lit(" v2"))).alias("digest"),
+    def build(root):
+        docs = load_table(spark, sf, "documents")
+        path = str(root / "docs_log")
+        docs.select("doc_id", F.md5("text").alias("digest")).write.parquet(
+            path
         )
-    )
-    inserts = docs.where(F.col("doc_id") % 17 == 0).select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.md5(F.concat(F.col("text"), F.lit(" new"))).alias("digest"),
-    )
-    log.merge_upsert(spark, updates.unionByName(inserts), key_cols=["doc_id"])
+        log = TableLog(path)
+        log.init()
+        log.delete_where(spark, "doc_id % 11 = 0")
+        updates = (
+            docs.where(
+                (F.col("doc_id") % 7 == 0) & (F.col("doc_id") % 11 != 0)
+            )
+            .select(
+                "doc_id",
+                F.md5(F.concat(F.col("text"), F.lit(" v2"))).alias("digest"),
+            )
+        )
+        inserts = docs.where(F.col("doc_id") % 17 == 0).select(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            F.md5(F.concat(F.col("text"), F.lit(" new"))).alias("digest"),
+        )
+        log.merge_upsert(
+            spark, updates.unionByName(inserts), key_cols=["doc_id"]
+        )
 
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():  # stale half-build from a crashed caller
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass  # concurrent builder published a complete table first
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("tt", sf, build) / "docs_log"))
 
 
 _TIMETRAVEL_DIFF_ORACLE = """
@@ -4525,52 +4506,31 @@ def _evolution_log(spark: SparkSession, sf: str):
       flat and hive files;
     - v3 ``delete``: doc_id % 5 = 0 purged — the COW rewrite spans
       BOTH layouts (1000000 ≡ 0 mod 4 and mod 5, so old and new keys
-      share bucket and purge fate with their source doc).
-
-    Same scratch-dir reuse discipline as ``_timetravel_log``: a
-    completed build (v3 manifest present) is reused; a half-build is
-    rebuilt privately and published by atomic rename."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+      share bucket and purge fate with their source doc)."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_pe_{slug}" / "docs_log"
-    if (tdir / "_commits" / f"v{3:012d}.json").exists():
-        return TableLog(str(tdir))
-
-    docs = load_table(spark, sf, "documents")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_pe_build_")) / "docs_log"
-    docs.select(
-        "doc_id",
-        (F.col("doc_id") % 4).cast("int").alias("bucket"),
-        F.md5("text").alias("digest"),
-    ).write.parquet(str(scratch))
-    log = TableLog(str(scratch))
-    log.init()
-    log.set_partitioning(spark, ["bucket"])
-    log.append(
-        spark,
-        docs.where(F.col("doc_id") % 3 == 0).select(
-            (F.col("doc_id") + 1000000).alias("doc_id"),
+    def build(root):
+        docs = load_table(spark, sf, "documents")
+        path = str(root / "docs_log")
+        docs.select(
+            "doc_id",
             (F.col("doc_id") % 4).cast("int").alias("bucket"),
-            F.md5(F.concat(F.col("text"), F.lit(" evo"))).alias("digest"),
-        ),
-    )
-    log.delete_where(spark, "doc_id % 5 = 0")
+            F.md5("text").alias("digest"),
+        ).write.parquet(path)
+        log = TableLog(path)
+        log.init()
+        log.set_partitioning(spark, ["bucket"])
+        log.append(
+            spark,
+            docs.where(F.col("doc_id") % 3 == 0).select(
+                (F.col("doc_id") + 1000000).alias("doc_id"),
+                (F.col("doc_id") % 4).cast("int").alias("bucket"),
+                F.md5(F.concat(F.col("text"), F.lit(" evo"))).alias("digest"),
+            ),
+        )
+        log.delete_where(spark, "doc_id % 5 = 0")
 
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass  # concurrent builder published a complete table first
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("pe", sf, build) / "docs_log"))
 
 
 _PARTITION_EVOLUTION_ORACLE = """
@@ -4674,89 +4634,69 @@ def _catalog_tx_scratch(spark: SparkSession, sf: str) -> str:
     ``catalog_txn_snapshot`` joins facts ⋈ dim, ``catalog_view_atomic``
     reads the materialized view — so view-vs-source divergence, debris
     leaking, or a rollback losing data is a hash mismatch, not just a
-    failing unit test. Same scratch-dir atomic-rename discipline as
-    ``_evolution_log`` (catalog table paths are parent-relative, so
-    the whole tree renames as one)."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    failing unit test. Catalog table paths are parent-relative, so the
+    whole tree moves as one when its scratch root is published."""
     from cve_manager_spark.catalogtx import CatalogLog
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_cattx_{slug}" / "tree"
-    if (tdir / "_done").exists():
-        return str(tdir / "catalog")
+    def build(root):
+        tree = root / "tree"
+        orders = load_table(spark, sf, "orders")
+        cust = load_table(spark, sf, "customer")
+        facts_df = orders.select(
+            "o_orderkey",
+            "o_custkey",
+            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
+                "total_cents"
+            ),
+        )
+        dim_df = cust.select("c_custkey", "c_mktsegment")
+        facts_df.write.parquet(str(tree / "facts"))
+        dim_df.write.parquet(str(tree / "dim"))
+        facts_df.join(
+            dim_df, F.col("o_custkey") == F.col("c_custkey")
+        ).write.parquet(str(tree / "view"))
+        flog, dlog = TableLog(str(tree / "facts")), TableLog(str(tree / "dim"))
+        vlog = TableLog(str(tree / "view"))
+        flog.init()
+        dlog.init()
+        vlog.init()
+        cat = CatalogLog(str(tree / "catalog"))
+        cat.init({"facts": flog, "dim": dlog, "view": vlog})
 
-    orders = load_table(spark, sf, "orders")
-    cust = load_table(spark, sf, "customer")
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_cattx_build_")) / "tree"
-    build.mkdir(parents=True)
-    facts_df = orders.select(
-        "o_orderkey",
-        "o_custkey",
-        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-            "total_cents"
-        ),
-    )
-    dim_df = cust.select("c_custkey", "c_mktsegment")
-    facts_df.write.parquet(str(build / "facts"))
-    dim_df.write.parquet(str(build / "dim"))
-    facts_df.join(
-        dim_df, F.col("o_custkey") == F.col("c_custkey")
-    ).write.parquet(str(build / "view"))
-    flog, dlog = TableLog(str(build / "facts")), TableLog(str(build / "dim"))
-    vlog = TableLog(str(build / "view"))
-    flog.init()
-    dlog.init()
-    vlog.init()
-    cat = CatalogLog(str(build / "catalog"))
-    cat.init({"facts": flog, "dim": dlog, "view": vlog})
+        txn = cat.begin()
+        txn.table("facts").delete_where(spark, "o_orderkey % 7 = 0")
+        txn.table("dim").merge_upsert(
+            spark,
+            txn.table("dim").read(spark)
+            .where("c_custkey % 4 = 0")
+            .withColumn("c_mktsegment", F.lit("REWRITTEN")),
+            ["c_custkey"],
+        )
+        txn.table("view").overwrite(
+            spark,
+            txn.table("facts").read(spark).join(
+                txn.table("dim").read(spark),
+                F.col("o_custkey") == F.col("c_custkey"),
+            ),
+        )
+        cat.commit(txn)
 
-    txn = cat.begin()
-    txn.table("facts").delete_where(spark, "o_orderkey % 7 = 0")
-    txn.table("dim").merge_upsert(
-        spark,
-        txn.table("dim").read(spark)
-        .where("c_custkey % 4 = 0")
-        .withColumn("c_mktsegment", F.lit("REWRITTEN")),
-        ["c_custkey"],
-    )
-    txn.table("view").overwrite(
-        spark,
-        txn.table("facts").read(spark).join(
-            txn.table("dim").read(spark),
-            F.col("o_custkey") == F.col("c_custkey"),
-        ),
-    )
-    cat.commit(txn)
+        crashed = cat.begin()
+        crashed.table("facts").delete_where(spark, "o_orderkey % 2 = 0")
+        crashed.table("view").overwrite(
+            spark,
+            crashed.table("facts").read(spark).join(
+                crashed.table("dim").read(spark),
+                F.col("o_custkey") == F.col("c_custkey"),
+            ),
+        )
+        # crash: no commit(), no intent — two-table debris, one unit;
+        # min_age=0 is the documented no-writer-in-flight opt-in (this
+        # builder is single-threaded, the 'crashed' txn is provably dead)
+        cat.reconcile(min_age_seconds=0)
 
-    crashed = cat.begin()
-    crashed.table("facts").delete_where(spark, "o_orderkey % 2 = 0")
-    crashed.table("view").overwrite(
-        spark,
-        crashed.table("facts").read(spark).join(
-            crashed.table("dim").read(spark),
-            F.col("o_custkey") == F.col("c_custkey"),
-        ),
-    )
-    # crash: no commit(), no intent — two-table debris, one unit;
-    # min_age=0 is the documented no-writer-in-flight opt-in (this
-    # builder is single-threaded, the 'crashed' txn is provably dead)
-    cat.reconcile(min_age_seconds=0)
-    (build / "_done").write_text("ok")
-
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(build, tdir)
-    except OSError:
-        pass  # concurrent builder published a complete tree first
-    shutil.rmtree(build.parent, ignore_errors=True)
-    return str(tdir / "catalog")
+    return str(scratch("cattx", sf, build) / "tree" / "catalog")
 
 
 _CATALOG_TXN_ORACLE = """
@@ -4843,67 +4783,47 @@ def _catalog_adddrop_scratch(spark: SparkSession, sf: str) -> str:
     missing the transaction, the drop deleting data, vacuum dropping
     the tag-pinned version, the tag resolving the wrong pins — is a
     hash mismatch against an oracle that recomputes the committed
-    effects straight from supplier/nation. Same scratch-dir
-    atomic-rename discipline as ``_catalog_tx_scratch``."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    effects straight from supplier/nation."""
     from cve_manager_spark.catalogtx import CatalogLog
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_catad_{slug}" / "tree"
-    if (tdir / "_done").exists():
-        return str(tdir / "catalog")
+    def build(root):
+        tree = root / "tree"
+        supp = load_table(spark, sf, "supplier")
+        nat = load_table(spark, sf, "nation")
+        supp.select(
+            "s_suppkey",
+            "s_nationkey",
+            F.expr("CAST(ROUND(s_acctbal * 100) AS BIGINT)").alias(
+                "bal_cents"
+            ),
+        ).write.parquet(str(tree / "facts"))
+        nat.select("n_nationkey", "n_name").write.parquet(str(tree / "dims"))
+        flog = TableLog(str(tree / "facts"))
+        flog.init()
+        cat = CatalogLog(str(tree / "catalog"))
+        cat.init({"facts": flog})
 
-    supp = load_table(spark, sf, "supplier")
-    nat = load_table(spark, sf, "nation")
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_catad_build_")) / "tree"
-    build.mkdir(parents=True)
-    supp.select(
-        "s_suppkey",
-        "s_nationkey",
-        F.expr("CAST(ROUND(s_acctbal * 100) AS BIGINT)").alias(
-            "bal_cents"
-        ),
-    ).write.parquet(str(build / "facts"))
-    nat.select("n_nationkey", "n_name").write.parquet(str(build / "dims"))
-    flog = TableLog(str(build / "facts"))
-    flog.init()
-    cat = CatalogLog(str(build / "catalog"))
-    cat.init({"facts": flog})
+        dlog = TableLog(str(tree / "dims"))
+        dlog.init()
+        cat.add_table("dims", dlog)
 
-    dlog = TableLog(str(build / "dims"))
-    dlog.init()
-    cat.add_table("dims", dlog)
+        txn = cat.begin()
+        txn.table("facts").delete_where(spark, "s_suppkey % 7 = 0")
+        txn.table("dims").merge_upsert(
+            spark,
+            txn.table("dims").read(spark)
+            .where("n_nationkey % 5 = 0")
+            .withColumn("n_name", F.lit("REWRITTEN")),
+            ["n_nationkey"],
+        )
+        cat.commit(txn)
 
-    txn = cat.begin()
-    txn.table("facts").delete_where(spark, "s_suppkey % 7 = 0")
-    txn.table("dims").merge_upsert(
-        spark,
-        txn.table("dims").read(spark)
-        .where("n_nationkey % 5 = 0")
-        .withColumn("n_name", F.lit("REWRITTEN")),
-        ["n_nationkey"],
-    )
-    cat.commit(txn)
+        cat.tag("with-dims")
+        cat.drop_table("dims")
+        cat.vacuum(keep_versions=1, min_age_seconds=0)
 
-    cat.tag("with-dims")
-    cat.drop_table("dims")
-    cat.vacuum(keep_versions=1, min_age_seconds=0)
-    (build / "_done").write_text("ok")
-
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(build, tdir)
-    except OSError:
-        pass  # concurrent builder published a complete tree first
-    shutil.rmtree(build.parent, ignore_errors=True)
-    return str(tdir / "catalog")
+    return str(scratch("catad", sf, build) / "tree" / "catalog")
 
 
 _CATALOG_ADDDROP_ORACLE = """
@@ -4992,67 +4912,47 @@ def _catalog_branch_scratch(spark: SparkSession, sf: str) -> str:
     then a snapshot cherry-pick merge — so the final main catalog
     carries BOTH effects and reads against the same oracle as the
     single-catalog transaction face (the two protocols must agree on
-    the committed state). Same atomic-rename build discipline as
-    ``_catalog_tx_scratch``."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    the committed state)."""
     from cve_manager_spark.catalogtx import CatalogLog
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_catbr_{slug}" / "tree"
-    if (tdir / "_done").exists():
-        return str(tdir / "catalog")
+    def build(root):
+        tree = root / "tree"
+        orders = load_table(spark, sf, "orders")
+        cust = load_table(spark, sf, "customer")
+        orders.select(
+            "o_orderkey",
+            "o_custkey",
+            F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
+                "total_cents"
+            ),
+        ).write.parquet(str(tree / "facts"))
+        cust.select("c_custkey", "c_mktsegment").write.parquet(
+            str(tree / "dim")
+        )
+        flog, dlog = TableLog(str(tree / "facts")), TableLog(str(tree / "dim"))
+        flog.init()
+        dlog.init()
+        cat = CatalogLog(str(tree / "catalog"))
+        cat.init({"facts": flog, "dim": dlog})
 
-    orders = load_table(spark, sf, "orders")
-    cust = load_table(spark, sf, "customer")
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_catbr_build_")) / "tree"
-    build.mkdir(parents=True)
-    orders.select(
-        "o_orderkey",
-        "o_custkey",
-        F.expr("CAST(ROUND(o_totalprice * 100) AS BIGINT)").alias(
-            "total_cents"
-        ),
-    ).write.parquet(str(build / "facts"))
-    cust.select("c_custkey", "c_mktsegment").write.parquet(
-        str(build / "dim")
-    )
-    flog, dlog = TableLog(str(build / "facts")), TableLog(str(build / "dim"))
-    flog.init()
-    dlog.init()
-    cat = CatalogLog(str(build / "catalog"))
-    cat.init({"facts": flog, "dim": dlog})
+        br = cat.branch(str(tree / "feature"))
+        btxn = br.begin()
+        btxn.table("facts").delete_where(spark, "o_orderkey % 7 = 0")
+        br.commit(btxn)
+        # main moves a DIFFERENT table while the branch is out
+        mtxn = cat.begin()
+        mtxn.table("dim").merge_upsert(
+            spark,
+            mtxn.table("dim").read(spark)
+            .where("c_custkey % 4 = 0")
+            .withColumn("c_mktsegment", F.lit("REWRITTEN")),
+            ["c_custkey"],
+        )
+        cat.commit(mtxn)
+        cat.merge_branch(br)
 
-    br = cat.branch(str(build / "feature"))
-    btxn = br.begin()
-    btxn.table("facts").delete_where(spark, "o_orderkey % 7 = 0")
-    br.commit(btxn)
-    # main moves a DIFFERENT table while the branch is out
-    mtxn = cat.begin()
-    mtxn.table("dim").merge_upsert(
-        spark,
-        mtxn.table("dim").read(spark)
-        .where("c_custkey % 4 = 0")
-        .withColumn("c_mktsegment", F.lit("REWRITTEN")),
-        ["c_custkey"],
-    )
-    cat.commit(mtxn)
-    cat.merge_branch(br)
-    (build / "_done").write_text("ok")
-
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(build, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(build.parent, ignore_errors=True)
-    return str(tdir / "catalog")
+    return str(scratch("catbr", sf, build) / "tree" / "catalog")
 
 
 @_register(
@@ -5098,68 +4998,54 @@ def _two_stream_view_state(spark: SparkSession, sf: str) -> str:
     whatever the chopping (the convergence theorem the streaming tests
     prove); the oracle recomputes facts ⋈ newest-dim straight from the
     tables, so the whole two-stream IVM pipeline hash-verifies end to
-    end. A completed build carries a ``_done`` marker; builders race
-    into private dirs and publish by atomic rename."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    end."""
     from cve_manager_spark.streaming.sinks import (
         foreach_batch_ss_dim,
         foreach_batch_ss_facts,
     )
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_ss_{slug}" / "view"
-    if (tdir / "_done").exists():
-        return str(tdir)
+    def build(root):
+        orders = load_table(spark, sf, "orders")
+        cust = load_table(spark, sf, "customer")
+        dim1 = cust.withColumn("upd_ts", F.lit(1).cast("long"))
+        dim2 = (
+            cust.where(F.col("c_custkey") % 3 == 0)
+            .withColumn("c_acctbal", F.col("c_acctbal") + F.lit(1000.0))
+            .withColumn("upd_ts", F.lit(2).cast("long"))
+        )
+        fsrc, dsrc, out = root / "facts", root / "dim", root / "view"
+        orders.repartition(3).write.parquet(str(fsrc))
+        dim1.repartition(2).write.parquet(str(dsrc))
 
-    orders = load_table(spark, sf, "orders")
-    cust = load_table(spark, sf, "customer")
-    dim1 = cust.withColumn("upd_ts", F.lit(1).cast("long"))
-    dim2 = (
-        cust.where(F.col("c_custkey") % 3 == 0)
-        .withColumn("c_acctbal", F.col("c_acctbal") + F.lit(1000.0))
-        .withColumn("upd_ts", F.lit(2).cast("long"))
-    )
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_ss_build_"))
-    fsrc, dsrc, out = build / "facts", build / "dim", build / "view"
-    orders.repartition(3).write.parquet(str(fsrc))
-    dim1.repartition(2).write.parquet(str(dsrc))
-
-    def run(side):
-        if side == "facts":
-            return foreach_batch_ss_facts(
-                spark.readStream.schema(orders.schema)
-                .option("maxFilesPerTrigger", 1).parquet(str(fsrc)),
-                str(out), "o_orderkey", "o_custkey", "c_custkey",
+        def run(side):
+            if side == "facts":
+                return foreach_batch_ss_facts(
+                    spark.readStream.schema(orders.schema)
+                    .option("maxFilesPerTrigger", 1).parquet(str(fsrc)),
+                    str(out), "o_orderkey", "o_custkey", "c_custkey",
+                    n_buckets=16,
+                )
+            return foreach_batch_ss_dim(
+                spark.readStream.schema(dim1.schema)
+                .option("maxFilesPerTrigger", 1).parquet(str(dsrc)),
+                str(out), "o_custkey", "c_custkey", "upd_ts",
                 n_buckets=16,
             )
-        return foreach_batch_ss_dim(
-            spark.readStream.schema(dim1.schema)
-            .option("maxFilesPerTrigger", 1).parquet(str(dsrc)),
-            str(out), "o_custkey", "c_custkey", "upd_ts",
-            n_buckets=16,
-        )
 
-    qf, qd = run("facts"), run("dim")
-    qf.awaitTermination()
-    qd.awaitTermination()
-    # late dim updates land AFTER the facts: the rewrite path
-    dim2.repartition(1).write.mode("append").parquet(str(dsrc))
-    run("dim").awaitTermination()
-    (out / "_done").write_text("ok")
+        qf, qd = run("facts"), run("dim")
+        qf.awaitTermination()
+        qd.awaitTermination()
+        # late dim updates land AFTER the facts: the rewrite path
+        dim2.repartition(1).write.mode("append").parquet(str(dsrc))
+        run("dim").awaitTermination()
+        # the chopped sources are flat parquet dirs and build inputs,
+        # not state: only the drained view is published
+        for src in (fsrc, dsrc):
+            for f in src.iterdir():
+                f.unlink()
+            src.rmdir()
 
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(out, tdir)
-    except OSError:
-        pass  # concurrent builder won
-    shutil.rmtree(build, ignore_errors=True)
-    return str(tdir)
+    return str(scratch("ss", sf, build) / "view")
 
 
 _TWO_STREAM_VIEW_ORACLE = """
@@ -5251,39 +5137,21 @@ def graph_bfs_hops(spark: SparkSession, sf: str) -> DataFrame:
 def _zonemap_log(spark: SparkSession, sf: str):
     """A range-CLUSTERED commit-logged table carved from documents
     (doc_id-sorted files, ~10 disjoint ranges) — the layout whose
-    footer zone maps make range predicates prune to O(matching files).
-    Same completed-build reuse discipline as the other scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    footer zone maps make range predicates prune to O(matching files)."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_zm_{slug}" / "docs_log"
-    if (tdir / "_commits" / f"v{0:012d}.json").exists():
-        return TableLog(str(tdir))
+    def build(root):
+        path = str(root / "docs_log")
+        (
+            load_table(spark, sf, "documents")
+            .select("doc_id", F.md5("text").alias("digest"))
+            .repartitionByRange(10, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.parquet(path)
+        )
+        TableLog(path).init()
 
-    docs = load_table(spark, sf, "documents")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_zm_build_")) / "docs_log"
-    (
-        docs.select("doc_id", F.md5("text").alias("digest"))
-        .repartitionByRange(10, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.parquet(str(scratch))
-    )
-    log = TableLog(str(scratch))
-    log.init()
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("zm", sf, build) / "docs_log"))
 
 
 _ZONEMAP_ORACLE = """
@@ -5347,56 +5215,40 @@ def _cdf_pruned_log(spark: SparkSession, sf: str):
     'late' batch at doc_id+2e6 (4 clustered files); v3 COW-deletes
     every base doc_id % 5 = 0 (rewrites base-range files only). Every
     commit records per-file [min,max] at write time, so the three
-    id bands are disjoint at the FILE level. Same completed-build
-    reuse discipline as the other scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    id bands are disjoint at the FILE level."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_cdfp_{slug}" / "log"
-    if (tdir / "_commits" / f"v{3:012d}.json").exists():
-        return TableLog(str(tdir))
+    def build(root):
+        docs = load_table(spark, sf, "documents")
+        path = str(root / "log")
+        base = docs.select("doc_id", F.md5("text").alias("digest"))
+        (
+            base.repartitionByRange(10, "doc_id")
+            .sortWithinPartitions("doc_id")
+            .write.parquet(path)
+        )
+        log = TableLog(path)
+        log.init()
+        evo = docs.where("doc_id % 3 = 0").select(
+            (F.col("doc_id") + 1000000).alias("doc_id"),
+            F.md5(F.concat(F.col("text"), F.lit(" evo"))).alias("digest"),
+        )
+        log.append(
+            spark,
+            evo.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"),
+        )
+        late = docs.where("doc_id % 4 = 0").select(
+            (F.col("doc_id") + 2000000).alias("doc_id"),
+            F.md5(F.concat(F.col("text"), F.lit(" late"))).alias("digest"),
+        )
+        log.append(
+            spark,
+            late.repartitionByRange(4, "doc_id")
+            .sortWithinPartitions("doc_id"),
+        )
+        log.delete_where(spark, "doc_id % 5 = 0 AND doc_id < 1000000")
 
-    docs = load_table(spark, sf, "documents")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_cdfp_build_")) / "log"
-    base = docs.select("doc_id", F.md5("text").alias("digest"))
-    (
-        base.repartitionByRange(10, "doc_id")
-        .sortWithinPartitions("doc_id")
-        .write.parquet(str(scratch))
-    )
-    log = TableLog(str(scratch))
-    log.init()
-    evo = docs.where("doc_id % 3 = 0").select(
-        (F.col("doc_id") + 1000000).alias("doc_id"),
-        F.md5(F.concat(F.col("text"), F.lit(" evo"))).alias("digest"),
-    )
-    log.append(
-        spark,
-        evo.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"),
-    )
-    late = docs.where("doc_id % 4 = 0").select(
-        (F.col("doc_id") + 2000000).alias("doc_id"),
-        F.md5(F.concat(F.col("text"), F.lit(" late"))).alias("digest"),
-    )
-    log.append(
-        spark,
-        late.repartitionByRange(4, "doc_id").sortWithinPartitions("doc_id"),
-    )
-    log.delete_where(spark, "doc_id % 5 = 0 AND doc_id < 1000000")
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("cdfp", sf, build) / "log"))
 
 
 def _bloom_log(spark: SparkSession, sf: str):
@@ -5406,46 +5258,29 @@ def _bloom_log(spark: SparkSession, sf: str):
     sidecars' job: even doc_ids form the init snapshot (PRE-enablement,
     no sidecars — the always-kept case), blooms are enabled, and odd
     doc_ids land via committed appends in 4 files, each recording its
-    digest bloom at write time. Same completed-build reuse discipline
-    as the other scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    digest bloom at write time."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_blm_{slug}" / "log"
-    if (tdir / "_commits" / f"v{1:012d}.json").exists():
-        return TableLog(str(tdir))
+    def build(root):
+        docs = load_table(spark, sf, "documents")
+        path = str(root / "log")
+        (
+            docs.where("doc_id % 2 = 0")
+            .select("doc_id", F.md5("text").alias("digest"))
+            .coalesce(2)
+            .write.parquet(path)
+        )
+        log = TableLog(path)
+        log.init()
+        log.enable_bloom("digest", bits=16384, k=5)
+        log.append(
+            spark,
+            docs.where("doc_id % 2 = 1")
+            .select("doc_id", F.md5("text").alias("digest"))
+            .repartition(4, "doc_id"),
+        )
 
-    docs = load_table(spark, sf, "documents")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_blm_build_")) / "log"
-    (
-        docs.where("doc_id % 2 = 0")
-        .select("doc_id", F.md5("text").alias("digest"))
-        .coalesce(2)
-        .write.parquet(str(scratch))
-    )
-    log = TableLog(str(scratch))
-    log.init()
-    log.enable_bloom("digest", bits=16384, k=5)
-    log.append(
-        spark,
-        docs.where("doc_id % 2 = 1")
-        .select("doc_id", F.md5("text").alias("digest"))
-        .repartition(4, "doc_id"),
-    )
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("blm", sf, build) / "log"))
 
 
 def _zorder_log(spark: SparkSession, sf: str):
@@ -5453,82 +5288,45 @@ def _zorder_log(spark: SparkSession, sf: str):
     initial write is time-ordered (user_id scattered across every
     file), then ``TableLog.zorder`` reclusters along the interleaved
     quantile-bucket curve so commit-time zone maps are narrow in BOTH
-    dimensions. Same completed-build reuse discipline as the other
-    scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    dimensions."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_zo_{slug}" / "log"
-    if (tdir / "_commits" / f"v{1:012d}.json").exists():
-        return TableLog(str(tdir))
-
-    ev = load_table(spark, sf, "events")
-    scratch = Path(tempfile.mkdtemp(prefix="cve_spark_zo_build_")) / "log"
-    (
-        ev.select(
-            "event_id", "user_id",
-            F.dayofmonth("ts").alias("day"),
-            F.col("event_type").alias("etype"),
+    def build(root):
+        path = str(root / "log")
+        (
+            load_table(spark, sf, "events").select(
+                "event_id", "user_id",
+                F.dayofmonth("ts").alias("day"),
+                F.col("event_type").alias("etype"),
+            )
+            .repartitionByRange(4, "event_id")  # time-ordered initial load
+            .write.parquet(path)
         )
-        .repartitionByRange(4, "event_id")  # time-ordered initial load
-        .write.parquet(str(scratch))
-    )
-    log = TableLog(str(scratch))
-    log.init()
-    # ~40 files at any scale (>=4 at the smallest sf): file-count is
-    # the pruning granularity, not a function of row count
-    n = log.row_count()
-    log.zorder(
-        spark, ["user_id", "day"],
-        target_rows_per_file=max(250, n // 40),
-    )
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(scratch, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(scratch.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+        log = TableLog(path)
+        log.init()
+        # ~40 files at any scale (>=4 at the smallest sf): file-count is
+        # the pruning granularity, not a function of row count
+        n = log.row_count()
+        log.zorder(
+            spark, ["user_id", "day"],
+            target_rows_per_file=max(250, n // 40),
+        )
+
+    return TableLog(str(scratch("zo", sf, build) / "log"))
 
 
 def _clone_log(spark: SparkSession, sf: str):
     """A zero-copy CLONE of the zonemap scratch table, then divergent:
     the clone COW-deletes every doc_id % 7 = 0 row while the source
     stays byte-identical — hard-linked immutable data files make the
-    clone O(files) metadata with zero data bytes copied. Same
-    completed-build reuse discipline as the other scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    clone O(files) metadata with zero data bytes copied."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_cl_{slug}" / "log"
-    if (tdir / "_commits" / f"v{1:012d}.json").exists():
-        return TableLog(str(tdir))
+    def build(root):
+        clone = _zonemap_log(spark, sf).clone(str(root / "log"))
+        clone.delete_where(spark, "doc_id % 7 = 0")
 
-    src = _zonemap_log(spark, sf)
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_cl_build_")) / "log"
-    clone = src.clone(str(build))
-    clone.delete_where(spark, "doc_id % 7 = 0")
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(build, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(build.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("cl", sf, build) / "log"))
 
 
 _CLONE_ORACLE = """
@@ -5688,40 +5486,23 @@ def _dv_log(spark: SparkSession, sf: str):
     """A commit-logged documents table with two MERGE-ON-READ deletes
     on top (delete_where_mor — Iceberg v2 position deletes): v0 init,
     v1 deletes doc_id % 7 = 3, v2 deletes doc_id % 11 = 5 of the
-    remainder. Deterministic version chain, same completed-build
-    reuse discipline as the other scratch logs."""
-    import os
-    import shutil
-    import tempfile
-    from pathlib import Path
-
+    remainder. Deterministic version chain."""
     from cve_manager_spark.commitlog import TableLog
 
-    slug = sf.strip("/").replace("/", "_").replace(".", "_")
-    tdir = Path(tempfile.gettempdir()) / f"cve_spark_dv_{slug}" / "docs_log"
-    if (tdir / "_commits" / f"v{2:012d}.json").exists():
-        return TableLog(str(tdir))
+    def build(root):
+        path = str(root / "docs_log")
+        (
+            load_table(spark, sf, "documents")
+            .select("doc_id", F.md5("text").alias("digest"))
+            .repartition(8, "doc_id")
+            .write.parquet(path)
+        )
+        log = TableLog(path)
+        log.init()
+        log.delete_where_mor(spark, "doc_id % 7 = 3")
+        log.delete_where_mor(spark, "doc_id % 11 = 5")
 
-    docs = load_table(spark, sf, "documents")
-    build = Path(tempfile.mkdtemp(prefix="cve_spark_dv_build_")) / "docs_log"
-    (
-        docs.select("doc_id", F.md5("text").alias("digest"))
-        .repartition(8, "doc_id")
-        .write.parquet(str(build))
-    )
-    log = TableLog(str(build))
-    log.init()
-    log.delete_where_mor(spark, "doc_id % 7 = 3")
-    log.delete_where_mor(spark, "doc_id % 11 = 5")
-    tdir.parent.mkdir(parents=True, exist_ok=True)
-    if tdir.exists():
-        shutil.rmtree(tdir, ignore_errors=True)
-    try:
-        os.replace(build, tdir)
-    except OSError:
-        pass
-    shutil.rmtree(build.parent, ignore_errors=True)
-    return TableLog(str(tdir))
+    return TableLog(str(scratch("dv", sf, build) / "docs_log"))
 
 
 _DV_DELETE_ORACLE = """
