@@ -49,19 +49,16 @@ import logging
 import os
 import shutil
 import time
+import unicodedata
 import uuid
 from pathlib import Path
+from urllib.parse import quote, unquote
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from cve_manager_spark.maintenance import (
-    _count_tmp,
-    _local_path,
-    _partition_cols,
-    plan_target_files,
-)
+from cve_manager_spark.maintenance import _partition_cols, plan_target_files
 
 _LOG_DIR = "_commits"
 _DV_DIR = "_deletes"
@@ -82,9 +79,11 @@ _DV_BROADCAST_ROWS = 4_000_000
 
 
 class CommitConflict(Exception):
-    """Another writer committed the version this writer was building
-    against. The losing operation has already cleaned up its staged
-    files; re-run it against the fresh snapshot to retry."""
+    """Another writer claimed the version this op was publishing (or,
+    on a blind append's retry, changed its CHECK constraints or forked
+    its schema). By the time it propagates the op has removed every
+    file it staged, so the table is as it was; re-run the op against
+    the fresh snapshot."""
 
 
 def _manifest_path(table: Path, version: int) -> Path:
@@ -178,14 +177,30 @@ def _fresh_stem(op: str) -> str:
     return f"part-{op}-{uuid.uuid4().hex[:12]}"
 
 
+# ASCII that java.net.URI leaves unescaped in a path component
+_URI_PATH_SAFE = "/;:@&=+$,!*'()"
+
+
+def _uri_path(path: str) -> str:
+    """``path`` percent-encoded the way Hadoop's ``Path.toUri()`` (and so
+    Spark's ``_metadata.file_path``) writes it: ASCII outside the URI
+    path set is escaped; other characters are kept unless they are
+    Unicode spaces or controls."""
+    return "".join(
+        quote(c, safe=_URI_PATH_SAFE)
+        if c < "\x80" or unicodedata.category(c) in ("Zs", "Zl", "Zp", "Cc")
+        else c
+        for c in path
+    )
+
+
 class TableLog:
     """Handle on a commit-logged parquet table rooted at ``path``."""
 
     def __init__(self, path: str):
-        # resolve(): delete_where/merge_upsert map input_file_name()'s
-        # absolute file:// URIs back to manifest-relative paths via
-        # Path.relative_to(self.root) — with a relative root that raises
-        # ValueError mid-operation, so normalize once at construction
+        # resolve(): lineage scans cut the root off the scan's absolute
+        # ``_metadata.file_path`` (see _lineage_cols) — a relative root
+        # would never match it, so normalize once at construction
         self.root = Path(path).resolve()
 
     # -- log bootstrap / inspection ------------------------------------
@@ -254,17 +269,22 @@ class TableLog:
         crash window between two logs' commits."""
         if self.latest_version() is None:
             return None
-        v, _ = self.snapshot(version)
-        with open(_manifest_path(self.root, v)) as f:
-            return json.load(f).get("op")
+        return self._manifest(version).get("op")
 
     def snapshot(self, version: int | None = None) -> tuple[int, list[str]]:
         """(version, relative file list) of the latest — or a pinned —
         manifest. Reading a pinned version is time travel; it stays
-        valid until ``vacuum`` drops that manifest. Resolution is O(1):
-        the latest comes off the ``_latest`` pointer, a pinned version
-        is one manifest existence check — no directory listing on the
-        read path (the listing only runs to build an error message)."""
+        valid until ``vacuum`` drops that manifest."""
+        m = self._manifest(version)
+        return m["version"], list(m["files"])
+
+    def _manifest(self, version: int | None = None) -> dict:
+        """The parsed manifest of the latest — or a pinned — version,
+        its ``version`` key set to the resolved number. Resolution is
+        O(1): the latest comes off the ``_latest`` pointer, a pinned
+        version is one manifest existence check — no directory listing
+        on the read path (the listing only runs to build an error
+        message)."""
         if version is None:
             v = self.latest_version()
             if v is None:
@@ -284,7 +304,8 @@ class TableLog:
                 )
         with open(_manifest_path(self.root, v)) as f:
             m = json.load(f)
-        return v, list(m["files"])
+        m["version"] = v
+        return m
 
     def commit_ts_of(self, version: int) -> float:
         """Wall-clock commit time of a version: the manifest's ``ts``
@@ -292,10 +313,10 @@ class TableLog:
         mtime for manifests that predate timestamp recording — the
         hard link is created at commit, so its mtime IS the commit
         time, just at filesystem precision."""
-        p = _manifest_path(self.root, version)
-        with open(p) as f:
-            ts = json.load(f).get("ts")
-        return float(ts) if ts is not None else p.stat().st_mtime
+        ts = self._manifest(version).get("ts")
+        if ts is not None:
+            return float(ts)
+        return _manifest_path(self.root, version).stat().st_mtime
 
     def version_at(self, ts: float) -> int:
         """The newest version committed AT OR BEFORE wall-clock ``ts``
@@ -330,9 +351,7 @@ class TableLog:
         returns both as of that version."""
         from pyspark.sql.types import StructType
 
-        v, _ = self.snapshot(version)
-        with open(_manifest_path(self.root, v)) as f:
-            s = json.load(f).get("schema")
+        s = self._manifest(version).get("schema")
         if s is None:
             return None
         if s.lstrip().startswith("{"):
@@ -346,9 +365,7 @@ class TableLog:
         that predate layout recording. The manifest's FILES may span
         several historical layouts (partition evolution rewrites no
         data); each file's own layout is declared by its path."""
-        v, _ = self.snapshot(version)
-        with open(_manifest_path(self.root, v)) as f:
-            return json.load(f).get("layout")
+        return self._manifest(version).get("layout")
 
     def _pcols(self, version: int | None = None) -> list[str]:
         """Write layout for a COW op pinned at ``version``: the
@@ -381,11 +398,10 @@ class TableLog:
             raise ValueError(
                 f"set_partitioning: {missing} not in table columns {known}"
             )
-        with open(_manifest_path(self.root, version)) as f:
-            raw_schema = json.load(f).get("schema")
         v = self._publish(
             version, files, "set-partitioning",
-            schema=raw_schema, layout=list(pcols),
+            schema=self._manifest(version).get("schema"),
+            layout=list(pcols),
         )
         return {"version": v, "layout": list(pcols)}
 
@@ -414,9 +430,7 @@ class TableLog:
         """The CHECK constraints recorded at ``version`` —
         ``{name: sql_expr}`` — versioned with the data like schema and
         layout (time travel sees the constraints that held then)."""
-        v, _ = self.snapshot(version)
-        with open(_manifest_path(self.root, v)) as f:
-            return json.load(f).get("constraints") or {}
+        return self._manifest(version).get("constraints") or {}
 
     def set_constraint(
         self, spark: SparkSession, name: str, expr: str
@@ -449,11 +463,9 @@ class TableLog:
                 "nothing committed"
             )
         cons[name] = expr
-        with open(_manifest_path(self.root, version)) as f:
-            raw_schema = json.load(f).get("schema")
         v = self._publish(
             version, files, f"set-constraint@{name}",
-            schema=raw_schema, constraints=cons,
+            schema=self._manifest(version).get("schema"), constraints=cons,
         )
         return {"version": v, "constraints": cons}
 
@@ -467,11 +479,9 @@ class TableLog:
                 f"constraint {name!r} not set on {self.root}"
             )
         del cons[name]
-        with open(_manifest_path(self.root, version)) as f:
-            raw_schema = json.load(f).get("schema")
         v = self._publish(
             version, files, f"drop-constraint@{name}",
-            schema=raw_schema,
+            schema=self._manifest(version).get("schema"),
             # explicit {} clears; None would inherit the dropped set
             constraints=cons if cons else {},
         )
@@ -502,6 +512,31 @@ class TableLog:
                 f"{what} on {self.root} violates CHECK constraints "
                 f"{viol} (violating-row counts); nothing committed"
             )
+
+    def _merge_rows(self, df: DataFrame, updates: DataFrame,
+                    key_cols: list[str], version: int, op: str) -> int:
+        """Row count of a merge's ``updates`` after refusing a schema
+        that differs from the pinned snapshot ``df`` and duplicate keys
+        (one aggregate over the per-key counts; ``groupBy`` puts NULL
+        keys in one group, as ``distinct()`` does, so two NULL keys are
+        duplicates); non-empty updates are then held to the CHECK
+        constraints."""
+        if sorted(df.columns) != sorted(updates.columns):
+            raise ValueError(
+                f"merge schema mismatch: table {sorted(df.columns)} vs "
+                f"updates {sorted(updates.columns)}"
+            )
+        _refuse_retype(df, updates, "merge schema mismatch: column types "
+                       "diverge")
+        per_key = updates.groupBy(*key_cols).agg(
+            F.count(F.lit(1)).alias("n")
+        )
+        n_rows, widest = per_key.agg(F.sum("n"), F.max("n")).first()
+        if (widest or 0) > 1:
+            raise ValueError(f"{op}: duplicate keys in updates")
+        if n_rows:
+            self._enforce_constraints(updates, version, "merge")
+        return n_rows or 0
 
     def enable_bloom(
         self, column: str, bits: int = 131072, k: int = 5
@@ -598,9 +633,7 @@ class TableLog:
         have live deletes (ops that replace a data file drop its
         entry), so ``sum(counts.values())`` is the live deleted-row
         count with zero data reads."""
-        v, _ = self.snapshot(version)
-        with open(_manifest_path(self.root, v)) as f:
-            return json.load(f).get("dv") or {}
+        return self._manifest(version).get("dv") or {}
 
     def _dv_df(self, spark: SparkSession, dv_files: list[str]) -> DataFrame:
         """Scan position-delete files into the canonical DV relation:
@@ -617,12 +650,17 @@ class TableLog:
     def _lineage_cols(self):
         """(rel-path expr, row-position expr) of the scanned file —
         parquet metadata columns resolved AT THE SCAN, so they stay
-        correct through any downstream join (``input_file_name()`` does
-        not: it reads task state and is undefined after a join mixes
-        streams). ``row_index`` is the row's ordinal within its
-        immutable file — the stable row identity position deletes key
-        on."""
-        prefix = str(self.root).rstrip("/") + "/"
+        correct through any downstream join (a task-level file name
+        is undefined once a join mixes streams). ``row_index`` is the
+        row's ordinal within its immutable file — the stable row
+        identity position deletes key on.
+
+        ``_metadata.file_path`` is a URI, so the rel path comes out
+        percent-encoded (``p=a%20b/...``): position-delete files store
+        it in that form and the scan-time anti-join compares encoded
+        with encoded. Any value that leaves the plan for the manifest
+        or the driver goes through :func:`unquote` first."""
+        prefix = _uri_path(str(self.root).rstrip("/") + "/")
         return (
             F.substring_index(
                 F.col("_metadata.file_path"), prefix, -1
@@ -694,6 +732,22 @@ class TableLog:
         if want_pos and not lineage:
             df = df.drop("__file", "__pos")
         return df
+
+    def _hits_per_file(self, spark: SparkSession, files: list[str], schema,
+                       dv: dict, match) -> dict[str, int]:
+        """Matched rows per data file — the one file-identity scan of
+        the copy-on-write ops. ``match`` filters (or joins) the
+        DV-applied lineage scan of ``files``; the per-file counts come
+        back keyed on manifest paths (``__file`` decoded)."""
+        if not files:
+            return {}
+        df = self._read_files(spark, files, schema, dv=dv or None,
+                              lineage=True)
+        rows = (
+            match(df).groupBy("__file")
+            .agg(F.count(F.lit(1)).alias("n")).collect()
+        )
+        return {unquote(r["__file"]): r["n"] for r in rows}
 
     # -- the commit primitive ------------------------------------------
 
@@ -780,40 +834,86 @@ class TableLog:
 
     # -- committed write operations ------------------------------------
     #
-    # Shape shared by all three: pin a snapshot; write NEW immutable part
-    # files (staged under fresh names directly in their final partition
-    # dirs — safe because no manifest references them until the commit);
-    # publish (old files ∖ replaced) ∪ new as parent+1. On conflict the
-    # staged files are unlinked and CommitConflict propagates — the table
-    # is bit-identical to before the attempt.
+    # Every write pins a snapshot, stages NEW immutable part files (under
+    # fresh names directly in their final partition dirs — safe because
+    # no manifest references them until the commit) and ends in _commit:
+    # each staged set's footer row count must equal the rows the op
+    # computed, then (old files ∖ replaced) ∪ new publishes as parent+1.
+    # A short set or a lost publish race unstages every set before the
+    # error propagates, so the table is bit-identical to before the
+    # attempt. append alone re-publishes the same staged files in a
+    # retry loop, after the same row check.
 
-    def _stage(self, out: DataFrame, op: str, pcols: list[str],
-               max_records: int | None = None) -> list[str]:
-        """Write ``out`` into the table dir under fresh part names;
-        return the new files' relative paths."""
+    def _commit(self, parent: int, files: list[str], op: str,
+                tag: str | None, staged: dict[str, tuple[list[str], int]],
+                **manifest) -> int:
+        """Check and publish one committed write. ``staged`` maps a label
+        to ``(new_rel, expected_rows)``; ``op`` is stamped ``op@tag``
+        when a tag is given; ``manifest`` goes to :meth:`_publish`.
+        Returns the new version."""
+        self._check_rows(op, staged)
+        try:
+            return self._publish(
+                parent, files, op if tag is None else f"{op}@{tag}",
+                **manifest,
+            )
+        except CommitConflict:
+            for rel, _ in staged.values():
+                self._abort(rel)
+            raise
+
+    def _check_rows(self, op: str,
+                    staged: dict[str, tuple[list[str], int]]) -> None:
+        """Refuse a commit unless every staged set holds the rows the op
+        computed, counted from the staged files' footers; a short set
+        unstages every set."""
+        short = [
+            f"{label} staged {n} of {want}"
+            for label, (rel, want) in staged.items()
+            if (n := _count_files(self.root, rel)) != want
+        ]
+        if short:
+            for rel, _ in staged.values():
+                self._abort(rel)
+            raise RuntimeError(
+                f"{op} row mismatch for {self.root}: {', '.join(short)}; "
+                "nothing committed"
+            )
+
+    def _land(self, write, op: str, dest_dir: Path | None = None
+              ) -> list[str]:
+        """Run ``write(tmp)`` into a fresh dir beside the table, move the
+        part files it wrote into the table under fresh ``op`` names —
+        into ``dest_dir``, or the partition dirs they were written
+        under — and return their relative paths."""
         # uuid-unique tmp dir: two concurrent writers of the SAME op must
         # not share a staging dir (the conflict is decided at publish
         # time, not by clobbering each other's rewrite)
         tmp = self.root.with_name(
             self.root.name + f".{op}-tmp-{uuid.uuid4().hex[:8]}"
         )
-        if tmp.exists():
-            shutil.rmtree(tmp)
+        write(str(tmp))
+        stem = _fresh_stem(op)
+        new_rel: list[str] = []
+        for i, f in enumerate(sorted(tmp.rglob("*.parquet"))):
+            dest = dest_dir or self.root / f.relative_to(tmp).parent
+            dest.mkdir(parents=True, exist_ok=True)
+            dest = dest / f"{stem}-{i:05d}.snappy.parquet"
+            f.rename(dest)
+            new_rel.append(str(dest.relative_to(self.root)))
+        shutil.rmtree(tmp)
+        return new_rel
+
+    def _stage(self, out: DataFrame, op: str, pcols: list[str],
+               max_records: int | None = None) -> list[str]:
+        """Write ``out`` into the table dir under fresh part names;
+        return the new files' relative paths."""
         writer = out.write
         if max_records is not None:
             writer = writer.option("maxRecordsPerFile", max_records)
         if pcols:
             writer = writer.partitionBy(*pcols)
-        writer.parquet(str(tmp))
-        stem = _fresh_stem(op)
-        new_rel: list[str] = []
-        for i, f in enumerate(sorted(tmp.rglob("*.parquet"))):
-            dest_dir = self.root / f.relative_to(tmp).parent
-            dest_dir.mkdir(parents=True, exist_ok=True)
-            dest = dest_dir / f"{stem}-{i:05d}.snappy.parquet"
-            f.rename(dest)
-            new_rel.append(str(dest.relative_to(self.root)))
-        shutil.rmtree(tmp)
+        new_rel = self._land(writer.parquet, op)
         # zone maps at WRITE time: the writer knows exactly which files
         # it produced, so it records their per-file min/max into the
         # sidecar here — an O(files-this-commit) thread-pooled footer
@@ -870,23 +970,35 @@ class TableLog:
         keeps its pre-count: nothing job-free estimates a predicate's
         matches, and the table's ``row_count`` would split a small
         delete on a large table into up to 32 files."""
-        tmp = self.root.with_name(
-            self.root.name + f".dv-tmp-{uuid.uuid4().hex[:8]}"
-        )
-        if tmp.exists():
-            shutil.rmtree(tmp)
         n_files = max(1, min(32, n_rows // 2_000_000 + 1))
-        hits.repartition(n_files).write.parquet(str(tmp))
-        stem = _fresh_stem("dvd")
-        dest_dir = self.root / _DV_DIR
-        dest_dir.mkdir(parents=True, exist_ok=True)
-        new_rel: list[str] = []
-        for i, f in enumerate(sorted(tmp.rglob("*.parquet"))):
-            dest = dest_dir / f"{stem}-{i:05d}.snappy.parquet"
-            f.rename(dest)
-            new_rel.append(str(dest.relative_to(self.root)))
-        shutil.rmtree(tmp)
-        return new_rel
+        return self._land(
+            hits.repartition(n_files).write.parquet, "dvd",
+            self.root / _DV_DIR,
+        )
+
+    def _dv_plus(self, spark: SparkSession, dv: dict,
+                 new_dv_rel: list[str]) -> tuple[dict | None, int]:
+        """The deletion-vector block carried forward by an op that
+        staged the delete files ``new_dv_rel``: their per-file counts
+        (one aggregate over the small staged relation, keys decoded to
+        manifest paths) add into the parent's counts. Returns the block
+        — ``None`` when no count is live — and the number of data files
+        the staged positions name. A staged file that has vanished adds
+        nothing; the row check in :meth:`_commit` refuses that commit."""
+        counts = dict(dv.get("counts", {}))
+        present = [r for r in new_dv_rel if (self.root / r).exists()]
+        per_file = (
+            self._dv_df(spark, present).groupBy("__dv_file")
+            .agg(F.count(F.lit(1)).alias("n")).collect()
+        ) if present else []
+        for r in per_file:
+            k = unquote(r["__dv_file"])
+            counts[k] = counts.get(k, 0) + r["n"]
+        if not counts:
+            return None, 0
+        block = {"files": list(dv.get("files", [])) + new_dv_rel,
+                 "counts": counts}
+        return block, len(per_file)
 
     def _dv_minus(self, dv: dict, replaced: "set[str]"):
         """The deletion-vector block carried forward by an op that
@@ -958,38 +1070,24 @@ class TableLog:
                     else ""
                 )
             )
-        tab_types, row_types = dict(df.dtypes), dict(rows.dtypes)
-        type_clash = {
-            c: (tab_types[c], row_types[c])
-            for c in tab_types
-            if tab_types[c] != row_types[c]
-        }
-        if type_clash:
-            raise ValueError(
-                "append schema mismatch: column types diverge "
-                f"{type_clash} — a silent widen would fork the table "
-                "schema across files"
-            )
+        _refuse_retype(df, rows, "append schema mismatch: column types "
+                       "diverge")
         n_rows = rows.count()
         if n_rows == 0:
             return {"n_appended": 0, "version": version}
         out_cols = list(df.columns) + added
         self._enforce_constraints(rows, version, "append")
         new_rel = self._stage(rows.select(*out_cols), "app", pcols)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_rows:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"append row mismatch for {self.root}: staged {n_new} of "
-                f"{n_rows} rows; nothing committed"
-            )
+        self._check_rows("append", {"rows": (new_rel, n_rows)})
         out_schema = _schema_json(rows.select(*out_cols))
-        op = "append" if tag is None else f"append@{tag}"
         parent, base = version, files
         for attempt in range(max_retries):
             try:
-                v = self._publish(
-                    parent, list(base) + new_rel, op, schema=out_schema
+                # nothing staged is handed to _commit: a lost race keeps
+                # the files for the retry below
+                v = self._commit(
+                    parent, list(base) + new_rel, "append", tag, {},
+                    schema=out_schema,
                 )
                 return {"n_appended": n_rows, "version": v}
             except CommitConflict:
@@ -1015,8 +1113,7 @@ class TableLog:
                 # the interleaved commit may have evolved the schema;
                 # merge its recorded fields into ours so the retried
                 # manifest doesn't shadow the concurrently added column
-                with open(_manifest_path(self.root, parent)) as f:
-                    theirs = json.load(f).get("schema")
+                theirs = self._manifest(parent).get("schema")
                 try:
                     out_schema = _union_schema_json(out_schema, theirs)
                 except CommitConflict:
@@ -1048,22 +1145,11 @@ class TableLog:
         n_rows = rows.count()
         self._enforce_constraints(rows, version, "overwrite")
         new_rel = self._stage(rows, "ovw", pcols)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_rows:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"overwrite row mismatch for {self.root}: staged {n_new} "
-                f"of {n_rows} rows; nothing committed"
-            )
-        op = "overwrite" if tag is None else f"overwrite@{tag}"
-        try:
-            # full replace: any deletion vectors die with the data
-            v = self._publish(
-                version, new_rel, op, schema=_schema_json(rows), dv=None
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
+        # full replace: any deletion vectors die with the data
+        v = self._commit(
+            version, new_rel, "overwrite", tag, {"rows": (new_rel, n_rows)},
+            schema=_schema_json(rows), dv=None,
+        )
         return {"n_rows": n_rows, "version": v}
 
     def rollback(self, to_version: int) -> dict[str, int]:
@@ -1079,7 +1165,8 @@ class TableLog:
         decides whether the rollback still makes sense against the new
         history — retrying blindly is wrong here, since the conflicting
         commit may BE the correction the rollback was for."""
-        _, files = self.snapshot(to_version)
+        m = self._manifest(to_version)
+        files = m["files"]
         latest = self.latest_version()
         if latest == to_version:
             return {"version": latest, "n_files": len(files)}
@@ -1090,8 +1177,6 @@ class TableLog:
         # quantizer id) can re-resolve at the restored content's
         # version instead of pairing rolled-back data with post-target
         # metadata
-        with open(_manifest_path(self.root, to_version)) as f:
-            m = json.load(f)
         v = self._publish(
             latest, files, f"rollback@to={to_version}",
             schema=m.get("schema"), layout=m.get("layout"),
@@ -1125,61 +1210,27 @@ class TableLog:
         # read the PINNED version, not the latest: a commit landing after
         # snapshot() must not leak its files into this rewrite (the publish
         # below would still conflict on parent, but the abort is cheaper
-        # and the row-count guard stays meaningful)
-        if dv:
-            # merge-on-read deletes already applied: a DV-deleted row
-            # can neither re-match the predicate nor be resurrected
-            # into the rewrite; lineage columns give the file identity
-            # (input_file_name is undefined through the anti-join)
-            df = self._read_files(spark, files, schema, dv=dv,
-                                  lineage=True)
-            hits = (
-                df.where(pred)
-                .groupBy("__file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            touched_rel = sorted(r["__file"] for r in hits)
-        else:
-            df = self.read(spark, version=version)
-            hits = (
-                df.withColumn("__f", F.input_file_name())
-                .where(pred)
-                .groupBy("__f")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            touched_rel = sorted(
-                str(_local_path(r["__f"]).relative_to(self.root))
-                for r in hits
-            )
+        # and the row-count guard stays meaningful). Merge-on-read
+        # deletes are applied, so a DV-deleted row can neither re-match
+        # the predicate nor be resurrected into the rewrite.
+        hits = self._hits_per_file(
+            spark, files, schema, dv, lambda df: df.where(pred)
+        )
         if not hits:
             return {"n_deleted": 0, "files_touched": 0, "version": version}
-        n_deleted = sum(r["n"] for r in hits)
-        affected = self._read_files(spark, touched_rel, schema,
+        n_deleted = sum(hits.values())
+        affected = self._read_files(spark, sorted(hits), schema,
                                     dv=dv or None)
         n_affected = affected.count()
         survivors = affected.where(~pred.eqNullSafe(F.lit(True)))
         new_rel = self._stage(survivors, "del", pcols)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_affected - n_deleted:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"delete row mismatch for {self.root}: affected {n_affected},"
-                f" deleted {n_deleted}, rewrote {n_new}; nothing committed"
-            )
-        out_files = [f for f in files if f not in set(touched_rel)] + new_rel
-        op = "delete" if tag is None else f"delete@{tag}"
-        try:
-            v = self._publish(
-                version, out_files, op, schema=_schema_json(affected),
-                dv=self._dv_minus(dv, set(touched_rel)) if dv
-                else _DV_INHERIT,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
-        return {"n_deleted": n_deleted, "files_touched": len(touched_rel),
+        v = self._commit(
+            version, [f for f in files if f not in hits] + new_rel,
+            "delete", tag, {"survivors": (new_rel, n_affected - n_deleted)},
+            schema=_schema_json(affected),
+            dv=self._dv_minus(dv, set(hits)) if dv else _DV_INHERIT,
+        )
+        return {"n_deleted": n_deleted, "files_touched": len(hits),
                 "version": v}
 
     def delete_where_mor(
@@ -1221,47 +1272,20 @@ class TableLog:
         dv = self._dv_of(version)
         df = self._read_files(spark, files, schema, dv=dv or None,
                               lineage=True)
-        hits = df.where(pred).select(
-            F.col("__file").alias("__dv_file"),
-            F.col("__pos").alias("__dv_pos"),
-        )
+        hits = _positions(df.where(pred))
         n_deleted = hits.count()
         if n_deleted == 0:
             return {"n_deleted": 0, "files_touched": 0, "version": version}
         new_dv_rel = self._stage_dv(hits, n_deleted)
-        n_staged = _count_files(self.root, new_dv_rel)
-        if n_staged != n_deleted:
-            self._abort(new_dv_rel)
-            raise RuntimeError(
-                f"delete-mor row mismatch for {self.root}: matched "
-                f"{n_deleted}, staged {n_staged}; nothing committed"
-            )
         # per-file counts off the just-staged (tiny) relation — keeps
         # the manifest's counts map exact without re-running the scan
-        per_file = {
-            r["__dv_file"]: r["n"]
-            for r in self._dv_df(spark, new_dv_rel).groupBy(
-                "__dv_file"
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        counts = dict(dv.get("counts", {}))
-        for k, n in per_file.items():
-            counts[k] = counts.get(k, 0) + n
-        new_dv = {
-            "files": list(dv.get("files", [])) + new_dv_rel,
-            "counts": counts,
-        }
-        with open(_manifest_path(self.root, version)) as f:
-            raw_schema = json.load(f).get("schema")
-        op = "delete-mor" if tag is None else f"delete-mor@{tag}"
-        try:
-            v = self._publish(
-                version, files, op, schema=raw_schema, dv=new_dv
-            )
-        except CommitConflict:
-            self._abort(new_dv_rel)
-            raise
-        return {"n_deleted": n_deleted, "files_touched": len(per_file),
+        new_dv, n_touched = self._dv_plus(spark, dv, new_dv_rel)
+        v = self._commit(
+            version, files, "delete-mor", tag,
+            {"positions": (new_dv_rel, n_deleted)},
+            schema=self._manifest(version).get("schema"), dv=new_dv,
+        )
+        return {"n_deleted": n_deleted, "files_touched": n_touched,
                 "dv_files": len(new_dv_rel), "version": v}
 
     def update_where_mor(
@@ -1315,73 +1339,26 @@ class TableLog:
         n_matched = matched.count()
         if n_matched == 0:
             return {"n_updated": 0, "version": version}
-        hits = matched.select(
-            F.col("__file").alias("__dv_file"),
-            F.col("__pos").alias("__dv_pos"),
-        )
-        new_dv_rel = self._stage_dv(hits, n_matched)
-        old_cols = [c for c in df.columns if c not in ("__file", "__pos")]
         exprs = {
             c: (F.expr(e) if isinstance(e, str) else e)
             for c, e in set_exprs.items()
         }
         images = matched.select(*[
-            exprs[c].alias(c) if c in exprs else F.col(c)
-            for c in old_cols
+            exprs[c].alias(c) if c in exprs else F.col(c) for c in known
         ])
-        base = self._read_files(spark, files, schema)
-        type_clash = {
-            c: (dict(base.dtypes)[c], dict(images.dtypes)[c])
-            for c in dict(base.dtypes)
-            if dict(base.dtypes)[c] != dict(images.dtypes)[c]
-        }
-        if type_clash:
-            self._abort(new_dv_rel)
-            raise ValueError(
-                "update_where_mor: set expressions change column types "
-                f"{type_clash} — a silent widen would fork the table "
-                "schema across files"
-            )
-        try:
-            self._enforce_constraints(images, version, "update")
-        except ValueError:
-            self._abort(new_dv_rel)
-            raise
+        _refuse_retype(df, images, "update_where_mor: set expressions "
+                       "change column types")
+        self._enforce_constraints(images, version, "update")
+        new_dv_rel = self._stage_dv(_positions(matched), n_matched)
         new_rel = self._stage(images, "upd", pcols)
-        n_new = _count_files(self.root, new_rel)
-        n_dv = _count_files(self.root, new_dv_rel)
-        if n_new != n_matched or n_dv != n_matched:
-            self._abort(new_rel)
-            self._abort(new_dv_rel)
-            raise RuntimeError(
-                f"update-mor row mismatch for {self.root}: matched "
-                f"{n_matched}, staged images {n_new}, staged positions "
-                f"{n_dv}; nothing committed"
-            )
-        per_file = {
-            r["__dv_file"]: r["n"]
-            for r in self._dv_df(spark, new_dv_rel).groupBy(
-                "__dv_file"
-            ).agg(F.count(F.lit(1)).alias("n")).collect()
-        }
-        counts = dict(dv.get("counts", {}))
-        for k, n in per_file.items():
-            counts[k] = counts.get(k, 0) + n
-        new_dv = {
-            "files": list(dv.get("files", [])) + new_dv_rel,
-            "counts": counts,
-        }
-        op = "update-mor" if tag is None else f"update-mor@{tag}"
-        try:
-            v = self._publish(
-                version, list(files) + new_rel, op,
-                schema=_schema_json(images), dv=new_dv,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            self._abort(new_dv_rel)
-            raise
-        return {"n_updated": n_matched, "files_touched": len(per_file),
+        new_dv, n_touched = self._dv_plus(spark, dv, new_dv_rel)
+        v = self._commit(
+            version, list(files) + new_rel, "update-mor", tag,
+            {"images": (new_rel, n_matched),
+             "positions": (new_dv_rel, n_matched)},
+            schema=_schema_json(images), dv=new_dv,
+        )
+        return {"n_updated": n_matched, "files_touched": n_touched,
                 "version": v}
 
     def merge_upsert_mor(
@@ -1408,94 +1385,38 @@ class TableLog:
         schema = self.schema_of(version)
         dv = self._dv_of(version)
         df = self.read(spark, version=version)
-        if sorted(df.columns) != sorted(updates.columns):
-            raise ValueError(
-                f"merge schema mismatch: table {sorted(df.columns)} vs "
-                f"updates {sorted(updates.columns)}"
-            )
-        tab_types, upd_types = dict(df.dtypes), dict(updates.dtypes)
-        type_clash = {
-            c: (tab_types[c], upd_types[c])
-            for c in tab_types
-            if tab_types[c] != upd_types[c]
-        }
-        if type_clash:
-            raise ValueError(
-                "merge schema mismatch: column types diverge "
-                f"{type_clash} — a silent widen would fork the table "
-                "schema across rewritten files"
-            )
-        n_updates = _unique_key_rows(updates, key_cols, "merge_upsert_mor")
+        n_updates = self._merge_rows(
+            df, updates, key_cols, version, "merge_upsert_mor"
+        )
         if n_updates == 0:
             return {"n_matched": 0, "n_inserted": 0, "version": version}
         keys = updates.select(*key_cols)
-        self._enforce_constraints(updates, version, "merge")
-        if not files:
-            out = updates.select(*df.columns)
-            new_rel = self._stage(out, "mrg", pcols)
-            try:
-                v = self._publish(
-                    version, new_rel,
-                    "merge-mor" if tag is None else f"merge-mor@{tag}",
-                    schema=_schema_json(df),
-                )
-            except CommitConflict:
-                self._abort(new_rel)
-                raise
-            return {"n_matched": 0, "n_inserted": n_updates, "version": v}
-        dfl = self._read_files(spark, files, schema, dv=dv or None,
-                               lineage=True)
-        # the match count rides on the one scan that writes the
-        # positions (an Observation adds no job); the update count
-        # sizes that write
-        seen = Observation()
-        hits = dfl.join(F.broadcast(keys), key_cols, "left_semi").select(
-            F.col("__file").alias("__dv_file"),
-            F.col("__pos").alias("__dv_pos"),
-        ).observe(seen, F.count(F.lit(1)).alias("n"))
-        new_dv_rel = self._stage_dv(hits, n_updates)
-        n_matched = seen.get["n"]
-        n_dv = _count_files(self.root, new_dv_rel)
-        if n_matched == 0:
-            # nothing matched: drop the empty position file so the
-            # manifest's dv block is carried over untouched
-            self._abort(new_dv_rel)
-            new_dv_rel = []
+        new_dv_rel, n_matched = [], 0
+        if files:
+            dfl = self._read_files(spark, files, schema, dv=dv or None,
+                                   lineage=True)
+            # the match count rides on the one scan that writes the
+            # positions (an Observation adds no job); the update count
+            # sizes that write
+            seen = Observation()
+            hits = _positions(
+                dfl.join(F.broadcast(keys), key_cols, "left_semi")
+            ).observe(seen, F.count(F.lit(1)).alias("n"))
+            new_dv_rel = self._stage_dv(hits, n_updates)
+            n_matched = seen.get["n"]
+            if n_matched == 0:
+                # nothing matched: drop the empty position file so the
+                # manifest's dv block is carried over untouched
+                self._abort(new_dv_rel)
+                new_dv_rel = []
         new_rel = self._stage(updates.select(*df.columns), "mrg", pcols)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_updates or n_dv != n_matched:
-            self._abort(new_rel)
-            self._abort(new_dv_rel)
-            raise RuntimeError(
-                f"merge-mor row mismatch for {self.root}: updates "
-                f"{n_updates}, staged {n_new}, matched {n_matched}, "
-                f"staged positions {n_dv}; nothing committed"
-            )
-        counts = dict(dv.get("counts", {}))
-        if new_dv_rel:
-            per_file = {
-                r["__dv_file"]: r["n"]
-                for r in self._dv_df(spark, new_dv_rel).groupBy(
-                    "__dv_file"
-                ).agg(F.count(F.lit(1)).alias("n")).collect()
-            }
-            for k, n in per_file.items():
-                counts[k] = counts.get(k, 0) + n
-        new_dv = (
-            {"files": list(dv.get("files", [])) + new_dv_rel,
-             "counts": counts}
-            if counts else None
+        new_dv, _ = self._dv_plus(spark, dv, new_dv_rel)
+        v = self._commit(
+            version, list(files) + new_rel, "merge-mor", tag,
+            {"updates": (new_rel, n_updates),
+             "positions": (new_dv_rel, n_matched)},
+            schema=_schema_json(df), dv=new_dv,
         )
-        op = "merge-mor" if tag is None else f"merge-mor@{tag}"
-        try:
-            v = self._publish(
-                version, list(files) + new_rel, op,
-                schema=_schema_json(df), dv=new_dv,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            self._abort(new_dv_rel)
-            raise
         return {"n_matched": n_matched,
                 "n_inserted": n_updates - n_matched, "version": v}
 
@@ -1568,29 +1489,20 @@ class TableLog:
             return {"dv_files_before": len((dv or {}).get("files", [])),
                     "dv_files_after": len((dv or {}).get("files", [])),
                     "version": version}
-        live = set(files)
+        # delete files hold the rel paths percent-encoded (see
+        # _lineage_cols), so the live set is matched in that form
+        live = sorted(set(files) & set(dv["counts"]))
         entries = self._dv_df(spark, dv["files"]).where(
-            F.col("__dv_file").isin(*sorted(live & set(dv["counts"])))
+            F.col("__dv_file").isin(*map(_uri_path, live))
         )
         n_live = sum(dv["counts"].values())
         new_rel = self._stage_dv(entries, n_live)
-        n_staged = _count_files(self.root, new_rel)
-        if n_staged != n_live:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"consolidate-deletes row mismatch for {self.root}: live "
-                f"{n_live}, staged {n_staged}; nothing committed"
-            )
-        with open(_manifest_path(self.root, version)) as f:
-            raw_schema = json.load(f).get("schema")
-        try:
-            v = self._publish(
-                version, files, "consolidate-deletes", schema=raw_schema,
-                dv={"files": new_rel, "counts": dict(dv["counts"])},
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
+        v = self._commit(
+            version, files, "consolidate-deletes", None,
+            {"positions": (new_rel, n_live)},
+            schema=self._manifest(version).get("schema"),
+            dv={"files": new_rel, "counts": dict(dv["counts"])},
+        )
         return {"dv_files_before": len(dv["files"]),
                 "dv_files_after": len(new_rel), "version": v}
 
@@ -1621,59 +1533,23 @@ class TableLog:
         schema = self.schema_of(version)
         dv = self._dv_of(version)
         df = self.read(spark, version=version)
-        if sorted(df.columns) != sorted(updates.columns):
-            raise ValueError(
-                f"merge schema mismatch: table {sorted(df.columns)} vs "
-                f"updates {sorted(updates.columns)}"
-            )
-        tab_types, upd_types = dict(df.dtypes), dict(updates.dtypes)
-        type_clash = {
-            c: (tab_types[c], upd_types[c])
-            for c in tab_types
-            if tab_types[c] != upd_types[c]
-        }
-        if type_clash:
-            raise ValueError(
-                "merge schema mismatch: column types diverge "
-                f"{type_clash} — a silent widen would fork the table "
-                "schema across rewritten files"
-            )
-        n_updates = _unique_key_rows(updates, key_cols, "merge_upsert")
+        n_updates = self._merge_rows(
+            df, updates, key_cols, version, "merge_upsert"
+        )
         if n_updates == 0:
             return {"n_matched": 0, "n_inserted": 0, "files_touched": 0,
                     "version": version}
         keys = updates.select(*key_cols)
-        self._enforce_constraints(updates, version, "merge")
-        if dv:
-            # DV-applied lineage read: a merge-on-read-deleted row
-            # must not match (its key inserts as new), and file
-            # identity must not go through input_file_name (undefined
-            # through the DV anti-join)
-            dfl = self._read_files(spark, files, schema, dv=dv,
-                                   lineage=True)
-            hits = (
-                dfl.join(F.broadcast(keys), key_cols)
-                .groupBy("__file")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            touched_rel = sorted(r["__file"] for r in hits)
-        else:
-            hits = (
-                df.withColumn("__f", F.input_file_name())
-                .join(F.broadcast(keys), key_cols)
-                .groupBy("__f")
-                .agg(F.count(F.lit(1)).alias("n"))
-                .collect()
-            )
-            touched_rel = sorted(
-                str(_local_path(r["__f"]).relative_to(self.root))
-                for r in hits
-            )
-        n_matched = sum(r["n"] for r in hits)
-        if touched_rel:
+        # DV-applied: a merge-on-read-deleted row must not match (its
+        # key inserts as new)
+        hits = self._hits_per_file(
+            spark, files, schema, dv,
+            lambda df: df.join(F.broadcast(keys), key_cols),
+        )
+        n_matched = sum(hits.values())
+        if hits:
             affected = self._read_files(
-                spark, touched_rel, schema, dv=dv or None
+                spark, sorted(hits), schema, dv=dv or None
             )
             n_affected = affected.count()
             out = affected.join(
@@ -1683,27 +1559,15 @@ class TableLog:
             n_affected = 0
             out = updates.select(*df.columns)
         new_rel = self._stage(out, "mrg", pcols)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_affected - n_matched + n_updates:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"merge row mismatch for {self.root}: affected {n_affected},"
-                f" matched {n_matched}, updates {n_updates}, rewrote {n_new};"
-                " nothing committed"
-            )
-        out_files = [f for f in files if f not in set(touched_rel)] + new_rel
-        op = "merge" if tag is None else f"merge@{tag}"
-        try:
-            v = self._publish(
-                version, out_files, op, schema=_schema_json(df),
-                dv=self._dv_minus(dv, set(touched_rel)) if dv
-                else _DV_INHERIT,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
+        v = self._commit(
+            version, [f for f in files if f not in hits] + new_rel,
+            "merge", tag,
+            {"rows": (new_rel, n_affected - n_matched + n_updates)},
+            schema=_schema_json(df),
+            dv=self._dv_minus(dv, set(hits)) if dv else _DV_INHERIT,
+        )
         return {"n_matched": n_matched, "n_inserted": n_updates - n_matched,
-                "files_touched": len(touched_rel), "version": v}
+                "files_touched": len(hits), "version": v}
 
     def compact(
         self,
@@ -1733,25 +1597,14 @@ class TableLog:
             out = (df.repartition(n_files, *pcols) if pcols
                    else df.repartition(n_files))
         new_rel = self._stage(out, "cmp", pcols, max_records=target_rows_per_file)
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_rows:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"compaction row mismatch for {self.root}: {n_rows} -> "
-                f"{n_new}; nothing committed"
-            )
-        try:
-            # compaction MATERIALIZES merge-on-read deletes: the
-            # rewrite read was DV-applied, so the new files carry no
-            # deleted rows and the dv block clears (vacuum reclaims
-            # the delete files once no retained manifest lists them)
-            v = self._publish(
-                version, new_rel, "compact", schema=_schema_json(df),
-                dv=None,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
+        # compaction MATERIALIZES merge-on-read deletes: the rewrite
+        # read was DV-applied, so the new files carry no deleted rows
+        # and the dv block clears (vacuum reclaims the delete files
+        # once no retained manifest lists them)
+        v = self._commit(
+            version, new_rel, "compact", None, {"rows": (new_rel, n_rows)},
+            schema=_schema_json(df), dv=None,
+        )
         return {"n_rows": n_rows, "files_before": len(files),
                 "files_after": len(new_rel), "version": v}
 
@@ -1797,10 +1650,9 @@ class TableLog:
                 f"{self.root} is at v{parent}, expected "
                 f"v{expected_version}"
             )
-        op = f"adopt@{tag}" if tag else "adopt"
-        v = self._publish(
-            parent, sorted(rel_files), op, schema=schema, layout=layout,
-            dv=dv, constraints=constraints,
+        v = self._commit(
+            parent, sorted(rel_files), "adopt", tag or None, {},
+            schema=schema, layout=layout, dv=dv, constraints=constraints,
         )
         return {"version": v, "n_files": len(rel_files)}
 
@@ -1823,7 +1675,8 @@ class TableLog:
         reference from the clone back into the source directory
         exists at all, so even deleting the source table wholesale
         leaves the clone intact."""
-        v, files = self.snapshot(version)
+        m = self._manifest(version)
+        v, files = m["version"], m["files"]
         droot = Path(dest)
         if (droot / _LOG_DIR).exists() or (
             droot.exists() and any(droot.rglob("*.parquet"))
@@ -1831,8 +1684,6 @@ class TableLog:
             raise ValueError(
                 f"clone destination {droot} already holds a table"
             )
-        with open(_manifest_path(self.root, v)) as f:
-            m = json.load(f)
         dv = m.get("dv") or {}
         # deletion-vector files travel with the snapshot: same
         # hard-link discipline (immutable, rel-path-keyed, so the
@@ -1961,23 +1812,12 @@ class TableLog:
         new_rel = self._stage(
             out, "zord", pcols, max_records=target_rows_per_file
         )
-        n_new = _count_files(self.root, new_rel)
-        if n_new != n_rows:
-            self._abort(new_rel)
-            raise RuntimeError(
-                f"zorder row mismatch for {self.root}: {n_rows} -> "
-                f"{n_new}; nothing committed"
-            )
-        try:
-            # full rewrite off the DV-applied read: merge-on-read
-            # deletes materialize here too, same as compact()
-            v = self._publish(
-                version, new_rel, "zorder", schema=_schema_json(df),
-                dv=None,
-            )
-        except CommitConflict:
-            self._abort(new_rel)
-            raise
+        # full rewrite off the DV-applied read: merge-on-read deletes
+        # materialize here too, same as compact()
+        v = self._commit(
+            version, new_rel, "zorder", None, {"rows": (new_rel, n_rows)},
+            schema=_schema_json(df), dv=None,
+        )
         return {"n_rows": n_rows, "files_before": len(files),
                 "files_after": len(new_rel), "version": v}
 
@@ -2082,8 +1922,10 @@ class TableLog:
         # entries are opened — never the whole snapshot.
         common = set(files_f) & set(files_t)
         if common and (dv_f or dv_t):
+            # delete files hold percent-encoded rel paths (see
+            # _lineage_cols): match them in that form
             cdf = spark.createDataFrame(
-                [(r,) for r in sorted(common)], "__cf string"
+                [(_uri_path(r),) for r in sorted(common)], "__cf string"
             )
 
             def dv_common(dv):
@@ -2113,7 +1955,7 @@ class TableLog:
                 if entries is None:
                     return None
                 touched = sorted(
-                    r["__dv_file"]
+                    unquote(r["__dv_file"])
                     for r in entries.select("__dv_file")
                     .distinct().collect()
                 )
@@ -2400,8 +2242,6 @@ class TableLog:
         shifts when a commit lands between the caller's floor
         computation and this call, silently dropping the floor-pinned
         manifest; a floor expressed as a VERSION NUMBER cannot."""
-        import time
-
         vs = self.versions()
         if keep_versions < 1:
             raise ValueError("keep_versions must be >= 1")
@@ -2412,8 +2252,7 @@ class TableLog:
             )
         live: set[str] = set()
         for v in keep:
-            with open(_manifest_path(self.root, v)) as f:
-                m = json.load(f)
+            m = self._manifest(v)
             live.update(m["files"])
             # position-delete files are live while any retained
             # manifest's dv block lists them
@@ -2454,17 +2293,25 @@ def _partition_cols_logged(root: Path) -> list[str]:
     return _partition_cols(root, "commitlog")
 
 
-def _unique_key_rows(updates: DataFrame, key_cols: list[str],
-                     op: str) -> int:
-    """Row count of ``updates``, after refusing duplicate keys — one
-    aggregate over the per-key counts. ``groupBy`` puts NULL keys in
-    one group, as ``distinct()`` does, so two NULL keys are
-    duplicates."""
-    per_key = updates.groupBy(*key_cols).agg(F.count(F.lit(1)).alias("n"))
-    n_rows, widest = per_key.agg(F.sum("n"), F.max("n")).first()
-    if (widest or 0) > 1:
-        raise ValueError(f"{op}: duplicate keys in updates")
-    return n_rows or 0
+def _refuse_retype(table: DataFrame, rows: DataFrame, what: str) -> None:
+    """Refuse new rows whose columns change a table column's type."""
+    new = dict(rows.dtypes)
+    clash = {
+        c: (t, new[c]) for c, t in table.dtypes
+        if c in new and t != new[c]
+    }
+    if clash:
+        raise ValueError(
+            f"{what} {clash} — a silent widen would fork the table "
+            "schema across files"
+        )
+
+
+def _positions(rows: DataFrame) -> DataFrame:
+    """A lineage scan's rows as a position-delete relation."""
+    return rows.select(
+        F.col("__file").alias("__dv_file"), F.col("__pos").alias("__dv_pos")
+    )
 
 
 def _count_files(root: Path, rel: list[str]) -> int:
@@ -2747,7 +2594,7 @@ class _BloomIndex:
             ])
             rows = (
                 df.select(
-                    F.input_file_name().alias("__f"),
+                    F.col("_metadata.file_path").alias("__f"),
                     F.explode(pos).alias("__p"),
                 )
                 .where(F.col("__p").isNotNull())

@@ -1071,11 +1071,6 @@ def _phash_df(spark: SparkSession, sf: str) -> DataFrame:
     return phash_ahash(thumbs)
 
 
-# bump when the decode/aHash kernel or the fan-out recipe changes: the
-# materialized fingerprint artifact self-invalidates on (key, mtime)
-_PHASH_KERNEL_VERSION = "phash-v1"
-
-
 def _phash_table(spark: SparkSession, sf: str) -> DataFrame:
     """The pHash fingerprint relation as a MATERIALIZED artifact — the
     DataFrame twin of the ``plans/artifacts.py`` frozen-artifact
@@ -1086,44 +1081,31 @@ def _phash_table(spark: SparkSession, sf: str) -> DataFrame:
     the Arrow decode kernel inside each face — twice for the self-join
     faces, since Spark does not dedupe common subplans — priced the
     decode 2–4× per query and thrashed under concurrent-suite memory
-    pressure. The artifact is keyed on (sf dir, documents.parquet
-    mtime, kernel version), so data or kernel changes self-invalidate;
-    the DuckDB oracles recompute from the raw table every run, so a
-    stale artifact would FAIL the driver's hash gate, never silently
-    pass. Scale shape: the fingerprint table is (doc_id, 16 hex chars,
-    4 shorts) — O(corpus rows), trivially storable; the decode cost is
-    paid once per snapshot, which is the point."""
-    import hashlib
-    import os
-    import shutil
-    import uuid as _uuid
+    pressure. The artifact lives in the scratch store
+    (:func:`~cve_manager_spark.plans.artifacts.scratch`), keyed on the
+    sf dir, the documents file's mtime and the package source, so a
+    data or code change builds a new one; the DuckDB oracles recompute
+    from the raw table every run, so a stale artifact would FAIL the
+    oracle hash gate, never silently pass. Scale shape: the
+    fingerprint table is (doc_id, 16 hex chars, 4 shorts) — O(corpus
+    rows), trivially storable; the decode cost is paid once per
+    snapshot, which is the point."""
     from pathlib import Path
 
-    src = Path(sf) / "documents.parquet"
+    from cve_manager_spark.plans.artifacts import scratch
+
     try:
-        mtime = src.stat().st_mtime_ns
+        mtime = (Path(sf) / "documents.parquet").stat().st_mtime_ns
     except OSError:
         # non-local or vanished source: no safe invalidation key, so
         # fall back to the unmaterialized plan
         return _phash_df(spark, sf)
-    key = hashlib.md5(
-        f"{Path(sf).resolve()}|{mtime}|{_PHASH_KERNEL_VERSION}".encode()
-    ).hexdigest()[:16]
-    root = Path(
-        os.environ.get(
-            "CVE_SPARK_ARTIFACT_DIR",
-            str(Path(__file__).resolve().parents[2] / ".artifacts"),
-        )
-    )
-    out = root / f"phash-{key}"
-    if not (out / "_SUCCESS").exists():
-        stage = root / f".phash-{key}-stage-{_uuid.uuid4().hex[:8]}"
-        _phash_df(spark, sf).write.mode("overwrite").parquet(str(stage))
-        try:
-            os.rename(stage, out)  # atomic claim; loser keeps existing
-        except OSError:
-            shutil.rmtree(stage, ignore_errors=True)
-    return spark.read.parquet(str(out))
+
+    def build(work):
+        _phash_df(spark, sf).write.parquet(str(work / "phash"))
+
+    root = scratch(f"phash{mtime}", sf, build)
+    return spark.read.parquet(str(root / "phash"))
 
 
 @_register(

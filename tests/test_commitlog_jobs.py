@@ -17,15 +17,15 @@ import logging
 import pytest
 from pyspark.sql import functions as F
 
-from cve_manager_spark.commitlog import TableLog
+from cve_manager_spark.commitlog import CommitConflict, TableLog
 
 _SCHEMA = "k long, part int, v long"
 
 
-def _mk(spark, tmp_path, name="t") -> TableLog:
+def _mk(spark, tmp_path, name="t", deletes=True) -> TableLog:
     """A 600-row, 4-file table whose manifest records its schema (as a
     streaming table's does after its first append), with live deletion
-    vectors on 60 rows."""
+    vectors on 60 rows unless ``deletes`` is False."""
     df = spark.range(0, 600).select(
         F.col("id").alias("k"),
         (F.col("id") % 3).cast("int").alias("part"),
@@ -36,7 +36,8 @@ def _mk(spark, tmp_path, name="t") -> TableLog:
     log = TableLog(str(path))
     log.init()
     log.append(spark, df.repartition(4, "k"))
-    log.delete_where_mor(spark, "k % 10 = 0")
+    if deletes:
+        log.delete_where_mor(spark, "k % 10 = 0")
     return log
 
 
@@ -81,6 +82,38 @@ _OPS = {
         spark, _upd(spark, range(1000, 1100))
     ),
     "compact": lambda spark, log: log.compact(spark, 250),
+    "overwrite": lambda spark, log: log.overwrite(
+        spark, _upd(spark, range(0, 50))
+    ),
+    "delete_where": lambda spark, log: log.delete_where(spark, "k % 10 = 3"),
+    "merge_upsert": lambda spark, log: log.merge_upsert(
+        spark, _upd(spark, range(500, 700)), ["k"]
+    ),
+    "update_where_mor": lambda spark, log: log.update_where_mor(
+        spark, "k % 10 = 2", {"v": "v + 1"}
+    ),
+    "consolidate_deletes": lambda spark, log: log.consolidate_deletes(spark),
+    "zorder": lambda spark, log: log.zorder(spark, ["v"], 250, bits_per_col=2),
+    "merge_upsert_mor_empty": lambda spark, log: log.merge_upsert_mor(
+        spark, _upd(spark, range(500, 700)), ["k"]
+    ),
+}
+
+
+def _truncate(spark, log):
+    """Commit an empty file list under the table's schema."""
+    m = _manifest(log)
+    log._publish(log.latest_version(), [], "truncate", schema=m["schema"],
+                 dv=None)
+
+
+# state an op needs before it stages anything: a second delete file to
+# consolidate, an empty table for the merge's insert-only branch
+_SETUP = {
+    "consolidate_deletes": lambda spark, log: log.delete_where_mor(
+        spark, "k % 10 = 5"
+    ),
+    "merge_upsert_mor_empty": _truncate,
 }
 
 
@@ -92,15 +125,57 @@ _OPS = {
         ("delete_where_mor", "_stage_dv"),
         ("append", "_stage"),
         ("compact", "_stage"),
+        ("overwrite", "_stage"),
+        ("delete_where", "_stage"),
+        ("merge_upsert", "_stage"),
+        ("update_where_mor", "_stage"),
+        ("update_where_mor", "_stage_dv"),
+        ("consolidate_deletes", "_stage_dv"),
+        ("zorder", "_stage"),
+        ("merge_upsert_mor_empty", "_stage"),
     ],
 )
 def test_lost_staged_file_is_a_row_mismatch(
     spark, tmp_path, monkeypatch, op, stage
 ):
     log = _mk(spark, tmp_path)
+    _SETUP.get(op, lambda spark, log: None)(spark, log)
     version, files_before = log.latest_version(), _on_disk(log)
     monkeypatch.setattr(TableLog, stage, _lose_one(getattr(TableLog, stage)))
     with pytest.raises(RuntimeError, match="row mismatch"):
+        _OPS[op](spark, log)
+    assert log.latest_version() == version
+    assert _on_disk(log) == files_before
+
+
+@pytest.mark.parametrize(
+    "op",
+    [
+        "overwrite",
+        "delete_where",
+        "merge_upsert",
+        "merge_upsert_mor",
+        "merge_upsert_mor_empty",
+        "update_where_mor",
+        "delete_where_mor",
+        "consolidate_deletes",
+        "compact",
+        "zorder",
+    ],
+)
+def test_lost_publish_race_leaves_nothing_staged(
+    spark, tmp_path, monkeypatch, op
+):
+    """Every staging op that loses its publish removes all it staged."""
+    log = _mk(spark, tmp_path)
+    _SETUP.get(op, lambda spark, log: None)(spark, log)
+    version, files_before = log.latest_version(), _on_disk(log)
+
+    def taken(self, parent, files, op, **manifest):
+        raise CommitConflict(f"v{parent + 1} was committed by another writer")
+
+    monkeypatch.setattr(TableLog, "_publish", taken)
+    with pytest.raises(CommitConflict, match="another writer"):
         _OPS[op](spark, log)
     assert log.latest_version() == version
     assert _on_disk(log) == files_before
@@ -161,7 +236,9 @@ def test_dml_job_counts(spark, tmp_path):
     vectors. Before staged-row counts came from footers, the duplicate-
     key check was one aggregate and the merge's match count an
     Observation, the same ops ran: merge 27, delete_where_mor 13,
-    append 7, compact 10, read().count() 4."""
+    append 7, compact 10, read().count() 4. The copy-on-write
+    ``delete_where`` and ``merge_upsert`` run on a table without
+    deletion vectors."""
     sc = spark.sparkContext
     log = _mk(spark, tmp_path)
 
@@ -187,6 +264,10 @@ def test_dml_job_counts(spark, tmp_path):
         "read": jobs("read", lambda: log.read(spark).count()),
         "compact": jobs("compact", lambda: _OPS["compact"](spark, log)),
     }
+    plain = _mk(spark, tmp_path, "plain", deletes=False)
+    for op in ("delete_where", "merge_upsert"):
+        got[op] = jobs(f"cow-{op}", lambda: _OPS[op](spark, plain))
     bounds = {"merge_upsert_mor": 10, "delete_where_mor": 8, "append": 4,
-              "read": 3, "compact": 6}
+              "read": 3, "compact": 6, "delete_where": 5,
+              "merge_upsert": 10}
     assert all(got[op] <= n for op, n in bounds.items()), got

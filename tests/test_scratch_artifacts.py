@@ -113,9 +113,7 @@ def test_failed_publish_without_complete_root_raises(tmp_path, monkeypatch):
     assert list(tmp_path.iterdir()) == []
 
 
-# the pHash fingerprint table keeps its own store, keyed on the
-# documents file's mtime (plans/pipeline.py::_phash_table)
-_ALLOWED = {("pipeline.py", "shutil.rmtree")}
+_ALLOWED: set[tuple[str, str]] = set()
 
 
 def _store_names(tree):
